@@ -9,6 +9,15 @@ import scala.util.chaining._
   * cluster, modulo `master`. AQE handles runtime re-planning (skew joins,
   * partition coalescing); shuffle partitions default low for local mode and
   * would be raised (or left to AQE) on a real cluster.
+  *
+  * Streaming checkpoints go through [[NioCheckpointFileManager]]. Each
+  * micro-batch writes an offset-log and a commit-log file, and without
+  * Hadoop's native library the local filesystem forks `chmod`/`readlink`
+  * shell commands for each one: that fixed per-batch cost set most of
+  * the pub/sub round trip. The manager writes and renames local
+  * checkpoint files with java.nio instead; paths on any non-local
+  * filesystem (HDFS, S3, ...) keep the manager Spark would pick on its
+  * own, so cluster behaviour is unchanged.
   */
 object Sessions {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
@@ -87,6 +96,8 @@ object Sessions {
               sys.env.contains("SPARK_GRAFT_BROADCAST_THRESHOLD")) "60s"
           else "30min"))
       .config("spark.ui.enabled", "false")
+      .config(NioCheckpointFileManager.ConfKey,
+        classOf[NioCheckpointFileManager].getName)
       // Heartbeat resilience (mult=1000 lesson #2): under a saturating
       // stage the single-JVM driver's RPC dispatcher can starve long
       // enough that the IN-PROCESS executor misses 60 consecutive 10-s

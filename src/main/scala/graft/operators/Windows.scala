@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** Window ("selection policy") operators.
   *
@@ -71,6 +72,14 @@ object Windows {
     * dropped) — semantics pinned by selection_policy_test.go:67-95.
     *
     * Emits (window_id, row) pairs; callers aggregate over window_id.
+    *
+    * Without `partitionBy` (the global form) the order key must be one
+    * numeric column, unique and non-null; any other key type is rejected
+    * with an IllegalArgumentException. Applying the global form's
+    * transform to a frame runs Spark jobs eagerly: it materializes the
+    * input (localCheckpoint), sketches key quantiles and collects
+    * per-bucket totals, and the row total enters the plan as a literal.
+    * The keyed form builds a lazy plan and takes any orderBy columns.
     */
   def countingWindowIds(orderBy: Seq[Column], n: Int, shift: Int,
       partitionBy: Seq[Column] = Nil): DataFrame => DataFrame = {
@@ -100,6 +109,12 @@ object Windows {
         require(orderBy.size == 1,
           "global counting windows need a single numeric order key " +
             "(the per-key variant takes arbitrary orderBy columns)")
+        // the key is cast to double for bucketing: a non-numeric key
+        // would become null and land every row in one bucket
+        val keyType = df.select(orderBy.head).schema.head.dataType
+        require(keyType.isInstanceOf[NumericType],
+          "global counting windows need a numeric order key column; " +
+            s"${orderBy.head} is ${keyType.simpleString}")
         val (cum, total) = Packing.globalCumsumWithTotal(
           df, orderBy.head, lit(1L), "_cum1")
         cum.withColumn("_rn", col("_cum1") - 1).drop("_cum1")

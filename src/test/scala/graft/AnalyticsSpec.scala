@@ -4,30 +4,20 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Approximate-distinct error bound, streaming session windows, and
   * pub/sub repository isolation (reference: isolated repositories,
   * pkg/processing/queries_test.go:75-125).
   */
-class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnalyticsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-an-${System.nanoTime()}"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

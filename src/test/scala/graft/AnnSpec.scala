@@ -1,25 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Ann
 
 /** ANN operators: brute-force correctness and IVF recall/pruning, plus
   * the bucketed co-located join shuffle-elimination proof.
   */
-class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-wh-${System.nanoTime()}"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   private def corpus = {
     val rng = new scala.util.Random(11)

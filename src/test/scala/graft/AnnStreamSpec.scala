@@ -2,12 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.operators.Ann
 import graft.streaming.{AnnStream, PubSub}
 import graft.streaming.AnnStream.{AnnHit, VecQuery}
@@ -17,14 +15,7 @@ import graft.streaming.AnnStream.{AnnHit, VecQuery}
   * ivfTopK results, across multiple waves (query-many), with each hit
   * stamped by its originating query.
   */
-class AnnStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-annstream-ckpt-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AnnStreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("stream hits equal batch ivfTopK wave-for-wave over a " +
       "once-assigned corpus, stamps carried from the query events") {
@@ -125,8 +116,7 @@ class AnnStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("embedding").as("cell_emb"))
       .cache()
     val assigned = Ann.assignCells(emb, centroids)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivfcells").toString
+    val root = tempPath("ivfcells")
     graft.core.Artifacts.saveIvfCells(spark, root, 1, assigned)
     // a "fresh query session": everything the relay serves comes from
     // the artifact store, no corpus-wide assignment pass of its own

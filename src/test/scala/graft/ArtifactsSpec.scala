@@ -2,12 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Artifacts, EventEnvelope, Sessions}
+import graft.core.{Artifacts, EventEnvelope}
 import graft.operators.{Bpe, Decontamination, Drift, Importance}
 import graft.streaming.TypedOps
 
@@ -17,17 +15,9 @@ import graft.streaming.TypedOps
   * session is constructible entirely from LOADED artifacts and behaves
   * exactly like one built from the in-memory originals.
   */
-class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ArtifactsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-artifacts-ckpt-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
-
-  private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+  private lazy val root = tempPath("artifacts")
 
   private val SfDir = "/root/testdata/sf0.001"
 

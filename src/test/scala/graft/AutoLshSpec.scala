@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Ann
 
 /** Ann.lshPlan / Ann.nearDupPairsAuto — the executable form of the
@@ -18,14 +15,9 @@ import graft.operators.Ann
   * low bits trips the hot-bucket guard completes under the auto-sized
   * scheme and still finds every planted near-duplicate pair.
   */
-class AutoLshSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AutoLshSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[8]")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-wh-${System.nanoTime()}"), 8).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 8
 
   test("bits tracks corpus size: E[bucket] pinned at targetBucket") {
     // n = targetBucket * 2^k gives exactly k bits (within the clamp)

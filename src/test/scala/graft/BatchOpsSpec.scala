@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.operators.{Joins, Ops, Windows}
 
@@ -13,13 +11,9 @@ import graft.operators.{Joins, Ops, Windows}
   * tests (reference: pkg/processing/default_operators_test.go,
   * pkg/events/selection_policy_test.go).
   */
-class BatchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BatchOpsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("even/odd truncate floats before parity (ref test :117-143)") {
     val df = Seq(2.9, 3.1, -2.5, -3.7, 4.0).toDF("v")
@@ -52,6 +46,18 @@ class BatchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // skip n=2 shift=3: rows 2, 5, 8 fall in no window
     val skip = ids(2, 3)
     assert(skip.values.flatten.toSet == Set(0L, 1L, 3L, 4L, 6L, 7L, 9L))
+  }
+
+  test("global counting windows reject a non-numeric order key") {
+    val df = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "id")
+    val e = intercept[IllegalArgumentException](
+      Windows.countingWindowIds(Seq(col("k")), 2, 2)(df))
+    assert(e.getMessage.contains("numeric order key") &&
+      e.getMessage.contains("string"), e.getMessage)
+    // the keyed form still orders by any column
+    val keyed = Windows.countingWindowIds(Seq(col("k")), 1, 1,
+      partitionBy = Seq(col("id")))(df)
+    assert(keyed.count() == 3)
   }
 
   test("counting window agg fires only complete windows (ref :144-146)") {

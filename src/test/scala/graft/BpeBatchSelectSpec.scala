@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Bpe
 
 /** Unit coverage of Bpe.selectBatch — the pure batching rule the
@@ -17,12 +15,7 @@ import graft.operators.Bpe
   * pairs OUTSIDE the fetched window past `bound`, so nothing may be
   * applied after it within the batch.
   */
-class BpeBatchSelectSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeBatchSelectSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def wcDf(wc: Map[String, Long]): DataFrame = {
     import spark.implicits._

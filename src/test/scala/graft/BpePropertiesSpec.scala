@@ -2,12 +2,9 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.expressions.BpeEncode
 import graft.operators.Bpe
 
@@ -78,12 +75,7 @@ object BpeModel {
   * distributed train and the encode expression against BpeModel on
   * every draw.
   */
-class BpePropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpePropertiesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def randomVocab(rng: scala.util.Random, alphabet: String,
       nWords: Int, maxLen: Int): Map[String, Long] =

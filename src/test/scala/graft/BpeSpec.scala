@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.expressions.BpeEncode
 import graft.operators.Bpe
 
@@ -16,12 +14,7 @@ import graft.operators.Bpe
   * merge-for-merge, and the encode expression must equal the naive
   * greedy-apply on every corpus word plus adversarial cases.
   */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeSpec extends AnyFunSuite with LocalSparkSuite {
 
   // reference implementation: BpeModel (shared with BpePropertiesSpec)
   private def refTrain(wc: Map[String, Long], k: Int): Seq[(String, String)] =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Sessions
@@ -18,12 +16,7 @@ import graft.core.Sessions
   * default), and the storage check is `getPersistentRDDs`, the same
   * executor-storage ledger a leak would grow.
   */
-class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CacheHygieneSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SfDir = "/root/testdata/sf0.001"
 

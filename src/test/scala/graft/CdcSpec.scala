@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Cdc
 
 /** The CDC boundary-stability property SCALE.md claims: an insertion
@@ -13,12 +11,7 @@ import graft.operators.Cdc
   * identically — while fixed-stride chunking re-aligns everything
   * downstream of the edit and loses the shared-chunk signal.
   */
-class CdcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CdcSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._

@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Components
 
 /** Near-dup consolidation: connected components by iterative min-label
   * propagation must label every vertex with its cluster's min id,
   * across multi-hop chains, and stay partition-invariant.
   */
-class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ComponentsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("multi-hop chains, separate clusters, and singletons-by-edge") {
     // components: {1,2,3,4} via chain 4-3, 3-2, 2-1; {10,11}; {20,21,22}

@@ -4,28 +4,16 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Control plane, metrics, and migration specs (reference:
   * pkg/pubsub/config_test.go, stream metric test stream_test.go:275-300,
   * migration test pub_sub_test.go:136-166).
   */
-class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-cp-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class ControlPlaneSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
   private def envs[T](values: Seq[T]): Seq[EventEnvelope[T]] =
@@ -186,6 +174,30 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     sub.close()
     assert(metrics.totalEventsIn >= 42)
     assert(t.eventsIn == 42)
+    ps.close()
+    spark.streams.removeListener(metrics)
+  }
+
+  test("metrics listener keeps each query's batch phase durations") {
+    val ps = new PubSub(spark)
+    val metrics = Metrics.install(spark)
+    val t = ps.topic[Int]("phased")
+    val before = spark.streams.active.map(_.id).toSet
+    val sub = ps.subscribe(t.stream)(_ => ())
+    val id = (spark.streams.active.map(_.id).toSet -- before).head
+    (1 to 3).foreach { i => t.publish(envs(Seq(i))); sub.drain() }
+    val deadline = System.currentTimeMillis() + 10000
+    while (!metrics.phases(id).get("addBatch").exists(_.samples >= 3) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(100)
+    sub.close()
+    val ph = metrics.phases(id)
+    assert(ph.keySet == MetricsListener.Phases.toSet)
+    ph.values.foreach { s =>
+      assert(s.samples >= 3 && s.lastMs >= 0 && s.medianMs >= 0, ph)
+    }
+    // every batch's trigger contains its sink call, so the medians agree
+    assert(ph("triggerExecution").medianMs >= ph("addBatch").medianMs)
+    assert(metrics.phases(java.util.UUID.randomUUID()).isEmpty)
     ps.close()
     spark.streams.removeListener(metrics)
   }

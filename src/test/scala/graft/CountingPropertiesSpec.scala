@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Windows
 
 /** Property-style cross-validation of the batch counting-window operator
@@ -15,13 +12,9 @@ import graft.operators.Windows
   * Sweeps a seeded sample of (n, shift, total) shapes covering tumbling,
   * overlapping, skipping, empty, and sub-window inputs.
   */
-class CountingPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CountingPropertiesSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   /** The reference semantics, as a pure function. */
   private def model(total: Int, n: Int, shift: Int): Map[Long, Seq[Long]] =
@@ -38,7 +31,7 @@ class CountingPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ps = new PubSub(spark)
     val topic = ps.topic[Int]("counting-restart")
     val wins = StatefulOps.countingWindows[Int](3, 3)(topic.stream)
-    val ckpt = s"/tmp/graft-ckpt-cr-${System.nanoTime()}"
+    val ckpt = tempPath("ckpt-cr")
     val fired = scala.collection.mutable.Buffer.empty[(Long, Seq[Int])]
     def start() = wins.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -76,7 +69,7 @@ class CountingPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val topic = ps.topic[Int]("counting-restart-keyed")
     val wins = StatefulOps.countingWindowsByKey[Int](2, 2)(
       e => if (e.content % 2 == 0) "even" else "odd")(topic.stream)
-    val ckpt = s"/tmp/graft-ckpt-crk-${System.nanoTime()}"
+    val ckpt = tempPath("ckpt-crk")
     val fired = scala.collection.mutable.Buffer.empty[(String, Seq[Int])]
     def start() = wins.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -108,10 +101,7 @@ class CountingPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import java.sql.Timestamp
     import graft.core.EventEnvelope
     import graft.streaming._
-    val sparkS = Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-xv-${System.nanoTime()}"), 4).getOrCreate()
-    val ps = new PubSub(sparkS)
+    val ps = new PubSub(spark)
     val t = ps.topic[Int]("xval")
     val wins = StatefulOps.countingWindows[Int](3, 2)(t.stream)
     val got = scala.collection.mutable.Buffer.empty[(Long, Seq[Int])]

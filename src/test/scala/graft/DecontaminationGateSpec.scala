@@ -2,12 +2,11 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.operators.Decontamination
 import graft.streaming._
 
@@ -15,14 +14,7 @@ import graft.streaming._
   * planted-overlap semantics and stream-vs-batch passage parity on the
   * fixture corpus.
   */
-class DecontaminationGateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-decon-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DecontaminationGateSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def stream(texts: Seq[String], buckets: Set[Long],
       minShared: Int): Seq[String] = {

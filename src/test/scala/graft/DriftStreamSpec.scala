@@ -4,12 +4,11 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.operators.Drift
 import graft.streaming._
 
@@ -18,14 +17,7 @@ import graft.streaming._
   * documents, and a window whose quality mix shifts away from the
   * baseline must score a higher PSI total than one matching it.
   */
-class DriftStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-drift-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DriftStreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L
   private def ts(sec: Int) = new Timestamp(base + sec * 1000L)

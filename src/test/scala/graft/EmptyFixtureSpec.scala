@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** Every catalog query must survive a ZERO-ROW corpus.
   *
@@ -23,15 +19,12 @@ import graft.core.Sessions
   * encoding whichever one the driver fixture carries), so this sweep
   * keeps pinning the real schemas as they evolve.
   */
-class EmptyFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
+class EmptyFixtureSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SrcDir = "/root/testdata/sf0.001"
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("emptysf").toString
+    val dir = tempPath("emptysf")
     // raw reads, no normalization: the empty fixture must carry the
     // exact on-disk schema (nanos-as-long long, TIMESTAMP_NTZ, or
     // TIMESTAMP — whatever this round's driver wrote)
@@ -42,8 +35,6 @@ class EmptyFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     dir
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("all catalog queries execute on an empty corpus") {
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()

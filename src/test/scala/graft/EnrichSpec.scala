@@ -4,26 +4,18 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.broadcast
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions, Stamp}
+import graft.core.{EventEnvelope, Stamp}
 import graft.streaming._
 
 /** Stream-static enrichment (TypedOps.enrichWithStatic): dimension
   * columns land in stamp meta, unmatched events pass through untouched,
   * existing meta survives with dimension-wins collision semantics.
   */
-class EnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-enrich-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EnrichSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

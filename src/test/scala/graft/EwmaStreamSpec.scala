@@ -4,11 +4,10 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Streaming per-key EWMA (StatefulOps.ewmaByKey): the left fold must be
@@ -17,14 +16,7 @@ import graft.streaming._
   * resulting trajectory must equal the batch q_ewma fold on the same
   * events.
   */
-class EwmaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ewma-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EwmaStreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L
   private def ev(key: String, sec: Int, seq: Long, v: Double) = {
@@ -139,7 +131,7 @@ class EwmaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = ps.topic[(Long, Double)](s"ewma-restart-${System.nanoTime()}")
     val out = StatefulOps.ewmaByKey(0.5, 1.5, "5 seconds")(
       _.stamp.meta.getOrElse("k", "?"))(t.stream)
-    val ckpt = s"/tmp/graft-ewma-ckpt-${System.nanoTime()}"
+    val ckpt = tempPath("ewma-ckpt")
     val buf = mutable.Buffer.empty[EwmaUpdate]
     def start() = out.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)

@@ -4,11 +4,9 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** End-to-end parity with the reference's shipped examples — each test
@@ -16,17 +14,7 @@ import graft.streaming._
   * engine and asserts its observable output, so "a user of the reference
   * could switch" is executable evidence, not a claim.
   */
-class ExamplesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-ex-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class ExamplesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L
   private def ts(sec: Int) = new Timestamp(base + sec * 1000L)

@@ -1,24 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.expressions.VectorExpressions
 import graft.functions.VectorFunctions
 
 /** Native codegen'd vector expressions: Scala API, SQL registration via
   * SparkSessionExtensions, and equivalence with the lambda formulation.
   */
-class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExpressionsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("graft_dot: Scala column API over float and double arrays") {
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(4.0, 5.0, 6.0)))

@@ -4,28 +4,17 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Fan-out topology and sorted (event-time ordered) delivery
   * (reference: CreateFanOutStream query_builder_test.go:195-253; sorted
   * stream pkg/pubsub/stream_test.go:203-273).
   */
-class FanOutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-fo-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class FanOutSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

@@ -1,11 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** Fixture-drift tripwire. Round 11 lost 32 queries, 10 bench headliners
   * and 9 tests to a SILENT driver-side change of `events.ts` from
@@ -16,12 +12,7 @@ import graft.core.Sessions
   * Tables.load's ts normalization), so the next encoding drift fails
   * here first with a message naming the table and column.
   */
-class FixtureSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FixtureSchemaSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SfDir = "/root/testdata/sf0.001"
 
@@ -117,8 +108,7 @@ class FixtureSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     // output loading EXACTLY like driver fixtures. Build a tiny mult=2
     // replica of sf0.001 and assert the post-load events schema matches
     // the same pin — whatever unit the source fixture carried.
-    val out = java.nio.file.Files
-      .createTempDirectory("scale-fixture-rt").toString
+    val out = tempPath("scale-fixture-rt")
     graft.ScaleFixture.run(spark, SfDir, out, 2)
     val got = graft.queries.Tables.load(spark, out, "events").schema
       .map(f => f.name -> f.dataType)

@@ -5,10 +5,9 @@ import java.sql.Timestamp
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Property-style checks of the gapless temporal sequencer: for random
@@ -17,19 +16,14 @@ import graft.streaming._
   * closed-bucket event lands in exactly the window of its own bucket,
   * and the keyed variant holds the same per key.
   */
-class GaplessPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GaplessPropertiesSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-gp-${System.nanoTime()}")
-      // surface task exceptions from stateful operators directly: with
-      // validation on, a task that fails mid-batch is masked by
-      // STATE_STORE_COMMIT_VALIDATION_FAILED and the root cause is lost
-      .config("spark.sql.streaming.stateStore.commitValidation.enabled",
-        "false"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // surface task exceptions from stateful operators directly: with
+  // validation on, a task that fails mid-batch is masked by
+  // STATE_STORE_COMMIT_VALIDATION_FAILED and the root cause is lost
+  override protected def configure(b: SparkSession.Builder) =
+    b.config("spark.sql.streaming.stateStore.commitValidation.enabled",
+      "false")
 
   private val base = 1700000000000L
   private val LenMs = 10000L
@@ -256,7 +250,7 @@ class GaplessPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ps = new PubSub(spark)
     val topic = ps.topic[Int]("gapless-restart")
     val out = StatefulOps.temporalBatchesGapless[Int](LenMs)(topic.stream)
-    val ckpt = s"/tmp/graft-ckpt-gapless-${System.nanoTime()}"
+    val ckpt = tempPath("ckpt-gapless")
     val batches = mutable.Buffer.empty[WindowBatch[Int]]
     def start() = out.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)

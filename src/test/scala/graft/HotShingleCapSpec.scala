@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Incremental
 
 /** The shingle document-frequency cap under a GENUINELY hot shingle.
@@ -25,12 +22,7 @@ import graft.operators.Incremental
   *    whose shared shingles are ALL hot produces no candidate and is
   *    admitted, even though its true Jaccard clears the threshold.
   */
-class HotShingleCapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HotShingleCapSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val NGram = 5
   private val MaxDf = 50
@@ -65,7 +57,7 @@ class HotShingleCapSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q_ngram_jaccard: hot shingle generates no pair; the true " +
       "near-dup pair survives with full-set string Jaccard") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hotshingle").toString
+    val dir = tempPath("hotshingle")
     corpus.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

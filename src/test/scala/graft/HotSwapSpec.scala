@@ -2,11 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Artifacts, EventEnvelope, Sessions}
+import graft.core.{Artifacts, EventEnvelope}
 import graft.operators.QualityModel
 import graft.streaming.{HotSwap, PubSub}
 
@@ -15,14 +13,7 @@ import graft.streaming.{HotSwap, PubSub}
   * a batch boundary with no event lost or duplicated — no consumer
   * restart, no barrier protocol.
   */
-class HotSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-hotswap-ckpt-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HotSwapSpec extends AnyFunSuite with LocalSparkSuite {
 
   // bias-only weight vectors saturate the sigmoid far from the 0.5 cut,
   // so keep/drop is unambiguous for ANY text
@@ -31,8 +22,7 @@ class HotSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bumping the classifier artifact flips a RUNNING gate at a batch " +
       "boundary with no event lost or duplicated") {
-    val root =
-      java.nio.file.Files.createTempDirectory("graft-hotswap").toString
+    val root = tempPath("hotswap")
     Artifacts.saveClassifier(spark, root, 1, keepAll)
     val ps = new PubSub(spark)
     val in = ps.topic[String]("hotswap-in")
@@ -86,8 +76,7 @@ class HotSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("gateRelay generalizes: bumping the importance LM flips a " +
       "RUNNING gate at a batch boundary with the same no-loss pins") {
-    val root =
-      java.nio.file.Files.createTempDirectory("graft-hotswap-lm").toString
+    val root = tempPath("hotswap-lm")
     // bucket-free LMs: every token takes the default log-ratio, so the
     // cut at 0.0 is unambiguous for any non-empty text
     val keepLm = graft.operators.Importance.Lm(Map.empty, 1000L)
@@ -139,8 +128,7 @@ class HotSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("decontamination-bucket hot swap: a doc passing under the v1 " +
       "eval suite is blocked once v2 adds its shingles") {
     import spark.implicits._
-    val root =
-      java.nio.file.Files.createTempDirectory("graft-hotswap-dc").toString
+    val root = tempPath("hotswap-dc")
     val planted = "the planted evaluation answer rides these exact words"
     val unrelated = "completely different ingest content about columnar " +
       "shuffles"
@@ -182,8 +170,7 @@ class HotSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the relay fails loudly when no classifier artifact exists") {
-    val root =
-      java.nio.file.Files.createTempDirectory("graft-hotswap-empty").toString
+    val root = tempPath("hotswap-empty")
     val ps = new PubSub(spark)
     val in = ps.topic[String]("hotswap-in-2")
     val out = ps.topic[String]("hotswap-out-2")

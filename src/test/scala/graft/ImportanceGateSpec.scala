@@ -2,12 +2,11 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.operators.Importance
 import graft.streaming._
 
@@ -16,14 +15,7 @@ import graft.streaming._
   * plan (q_importance_weights), and the streaming gate against the batch
   * filter on the same documents.
   */
-class ImportanceGateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-impgate-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ImportanceGateSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Incremental
 
 /** Seeded random sweep of Incremental.admit against a driver-side model
@@ -13,12 +10,7 @@ import graft.operators.Incremental
   * first-wins, reason priority — on corpora with planted exact copies
   * and single-token mutations across both the existing and delta sides.
   */
-class IncrementalPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IncrementalPropertiesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val NGram = 5
   private val MaxDf = 50

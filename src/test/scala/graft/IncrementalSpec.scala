@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Incremental
 
 /** Incremental corpus admission (Incremental.admit): planted duplicates
@@ -12,12 +10,7 @@ import graft.operators.Incremental
   * dups, so q_corpus_delta's oracle alone never covers the exact paths
   * or the reason priority.
   */
-class IncrementalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IncrementalSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def df(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._

@@ -4,11 +4,10 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Streaming corpus ingest (TypedOps.corpusIngest): quality gate first,
@@ -16,14 +15,7 @@ import graft.streaming._
   * shingle-able documents, exact dedup for short ones (the split that
   * keeps DISTINCT short docs from clustering on the sentinel signature).
   */
-class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ingest-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IngestSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 
@@ -162,7 +154,7 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ps = new PubSub(spark)
     val t = ps.topic[String](s"ingest-rec-${System.nanoTime()}")
     val kept = TypedOps.nearDupWithinWatermark("5 seconds").apply(t.stream)
-    val ckpt = s"/tmp/graft-ingest-rec-ckpt-${System.nanoTime()}"
+    val ckpt = tempPath("ingest-rec-ckpt")
     val buf = mutable.Buffer.empty[EventEnvelope[String]]
     def start() = kept.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.queries.SimilarityQueries
 
 /** The text-path STAR consolidation (SimilarityQueries.jaccardStarEdges,
@@ -13,13 +10,9 @@ import graft.queries.SimilarityQueries
   * equality with the all-pairs form in the clique regime, the honest
   * refinement caveat outside it, and the verified-edge contract.
   */
-class JaccardStarSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JaccardStarSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   private val T = 8000L // the ledger's 0.8 jaccard cut, integer-quantized
 

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.functions.VectorFunctions
 import graft.operators.Ann
 
@@ -15,12 +13,7 @@ import graft.operators.Ann
   * the payoff claim: trained centroids beat the naive id-sample
   * centroids on IVF recall against brute force.
   */
-class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KMeansSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SfDir = "/root/testdata/sf0.001"
 

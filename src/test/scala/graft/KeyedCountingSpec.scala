@@ -4,27 +4,16 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Keyed counting windows — the horizontally scalable stateful variant:
   * one independent window sequence per key, state partitioned by key.
   */
-class KeyedCountingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-kc-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class KeyedCountingSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

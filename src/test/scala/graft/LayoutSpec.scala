@@ -1,13 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Layout
 
 /** Pins the z-ordered write path: every produced file must cover a
@@ -15,12 +10,7 @@ import graft.operators.Layout
   * pruning feeds on), where a linear single-column sort leaves the
   * second dimension's bounds full-range in every file.
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LayoutSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val Files16 = 16
 
@@ -41,7 +31,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .select((col("l_orderkey") % 1024).as("ok"),
         (col("l_partkey") % 1024).as("pk"))
-    val base = Files.createTempDirectory("layout").toString
+    val base = tempPath("layout")
 
     Layout.writeZOrdered(li, s"$base/z", col("ok"), col("pk"),
       numFiles = Files16, bits = 10)
@@ -74,7 +64,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select((col("l_orderkey") % 1024).as("ok"),
         (col("l_partkey") % 1024).as("pk"),
         (col("l_extendedprice").cast("long") % 1024).as("ep"))
-    val base = Files.createTempDirectory("layout3").toString
+    val base = tempPath("layout3")
 
     Layout.writeZOrderedN(li, s"$base/z",
       Seq(col("ok"), col("pk"), col("ep")), numFiles = Files16, bits = 10)

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Ann
 import graft.queries.SimilarityQueries
 
@@ -21,14 +18,7 @@ import graft.queries.SimilarityQueries
   * within 1e-7 of a boundary — e.g. if a future fixture's count lands
   * n/targetBucket on an exact power of two.
   */
-class LshPlanOracleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-wh-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LshPlanOracleSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val Target = 0.999
   private val MinMargin = 1e-7

@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** Empirical recall of the MinHash-LSH near-dup path against the exact
   * shingle-Jaccard path, on the real sf0.001 fixture corpus.
@@ -15,12 +11,9 @@ import graft.core.Sessions
   * exact path emits must also be emitted by the LSH path, with the same
   * (rounded) jaccard, since both verify candidates exactly.
   */
-class LshRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LshRecallSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[8]"), 8).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cores = 8
 
   private val SfDir = "/root/testdata/sf0.001"
 

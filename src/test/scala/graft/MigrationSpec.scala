@@ -4,11 +4,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.streaming._
 
 /** Hot topic migration (reference: migrateStream, stream.go:109-123):
@@ -17,12 +14,7 @@ import graft.streaming._
   * publisher handles and subscriptions untouched while new default
   * subscribers observe the migrated policy.
   */
-class MigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MigrationSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("migrate drains pending delivery, applies capacity live, and " +
       "keeps the original subscription running") {

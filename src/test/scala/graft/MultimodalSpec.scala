@@ -2,25 +2,18 @@ package graft
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.multimodal._
 
 /** Multimodal: real-codec round trips (encoders vs the JDK's ImageIO /
   * AudioSystem decoders), per-partition decode determinism, metadata-only
   * transforms.
   */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MultimodalSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   private def docs = Seq(
     (0L, "hello world", 11L),

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Ann
 
 /** Embedding near-duplicate detection (Ann.nearDupPairs): planted
@@ -13,13 +10,9 @@ import graft.operators.Ann
   * pairs must NOT appear (the exact-cosine verification step filters any
   * accidental bucket collision).
   */
-class NearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NearDupSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   private val Dim = 32
 

@@ -4,11 +4,10 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Streaming approximate near-dup suppression
@@ -18,14 +17,7 @@ import graft.streaming._
   * MinHash seed is fixed, so band collisions — and therefore every
   * assertion here — are deterministic.
   */
-class NearDupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ndstream-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NearDupStreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

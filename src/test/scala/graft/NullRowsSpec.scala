@@ -1,11 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** Every catalog query must survive NULL-bearing rows.
   *
@@ -22,15 +18,12 @@ import graft.core.Sessions
   * malformed row by the embedding-table contract (fixed-dim arrays),
   * not a routine missing value.
   */
-class NullRowsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
+class NullRowsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SrcDir = "/root/testdata/sf0.001"
 
   private lazy val nullDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("nullsf").toString
+    val dir = tempPath("nullsf")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "embeddings"))
@@ -54,8 +47,6 @@ class NullRowsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("all catalog queries execute on a NULL-bearing corpus") {
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()

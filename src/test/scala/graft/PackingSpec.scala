@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.Packing
 
 /** Two-pass partition-offset cumsum (the scale-safe sequence-packing
@@ -14,13 +11,9 @@ import graft.operators.Packing
   * exactly, while the plan keeps the window PARTITIONED (no "move all
   * rows to one task" WindowExec).
   */
-class PackingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PackingSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("globalCumsum equals the global-window cumsum exactly") {
     val rng = new scala.util.Random(11)

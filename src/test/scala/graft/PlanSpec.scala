@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** Plan-shape regression guards for the scale claims SCALE.md makes:
   * the physical plan properties that make a query survive 100x, pinned
   * so a refactor can't silently lose them.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val SfDir = "/root/testdata/sf0.001"
 

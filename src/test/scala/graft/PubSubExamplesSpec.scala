@@ -4,11 +4,9 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** End-to-end parity with the reference's `examples/pubsub` programs —
@@ -34,17 +32,7 @@ import graft.streaming._
   * MemoryStream truncates its batches on per-query commit, so subscribers
   * must not share one source instance (see Topic's scaladoc).
   */
-class PubSubExamplesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-psex-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class PubSubExamplesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L
   private def ts(ms: Long) = new Timestamp(base + ms)

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Topic lifecycle parity with the reference repository semantics:
@@ -12,12 +10,7 @@ import graft.streaming._
   * blocked by attached publishers/subscribers (pub_sub_test.go:187-216),
   * and manual lifecycle for explicitly created streams (config.go:27).
   */
-class PubSubLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PubSubLifecycleSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("auto-created topic is cleaned when its last subscriber detaches " +
       "(ref pub_sub_test.go:55-70)") {

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.QualityModel
 import graft.operators.QualityModel.Weights
 
@@ -14,12 +11,7 @@ import graft.operators.QualityModel.Weights
   * separation on the weak label, and exact partition invariance of the
   * learned weights (the DECIMAL gradient-sum contract).
   */
-class QualityModelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QualityModelSpec extends AnyFunSuite with LocalSparkSuite {
 
   private lazy val docs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").cache()

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.expressions.RepetitionProfileExpr
 import graft.functions.TextFunctions
 
@@ -15,13 +12,9 @@ import graft.functions.TextFunctions
   * document, including whitespace runs, single-token docs (no grams),
   * repeated grams, and surrogate pairs.
   */
-class RepetitionProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RepetitionProfileSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   private val docs = Seq(
     1L -> "a b a b a",                       // repeated tokens and grams

@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.streaming._
 
 /** Negative paths and distributed-determinism invariants. */
-class RobustnessSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RobustnessSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("control plane rejects unknown operators and content types") {
     val ps = new PubSub(spark)

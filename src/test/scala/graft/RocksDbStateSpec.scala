@@ -6,7 +6,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{EventEnvelope, Sessions}
@@ -20,18 +19,10 @@ import graft.streaming._
   * own progress metrics asserted so the test cannot silently fall back
   * to the in-memory store.
   */
-class RocksDbStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RocksDbStateSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tuneLargeState(
-      Sessions.tune(SparkSession.builder().master("local[4]")
-        .config("spark.sql.streaming.checkpointLocation",
-          s"/tmp/graft-rocks-ckpt-${System.nanoTime()}"), 4)).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+  override protected def configure(b: SparkSession.Builder) =
+    Sessions.tuneLargeState(b)
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.operators.{Ann, Joins}
 
 /** Skew torture: the guards and repairs exist since round 11/12 — this
@@ -27,15 +24,10 @@ import graft.operators.{Ann, Joins}
   *    co-located join, still lands on one task; salting is the repair
   *    that works at ANY granularity.)
   */
-class SkewTortureSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewTortureSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[8]")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-wh-${System.nanoTime()}"), 8).getOrCreate()
+  override protected def cores = 8
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Deterministic background vectors, spread (unlike the hot cluster):
     * every component uniform-ish in [-1, 1) from xxhash64 of the flat

@@ -2,30 +2,22 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.functions.Aggregators
 import graft.sources.EventSources
 
 /** Lake-facing sources/sinks and the typed Aggregator surface. */
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SourcesSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-src-${System.nanoTime()}"), 4).getOrCreate()
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("streaming parquet source: tail a lake table, agg matches batch") {
     // file streaming sources tail a DIRECTORY of files (the lake-table
     // shape) — stage the single-file fixture into one
-    val path = s"/tmp/graft-lake-${System.nanoTime()}"
+    val path = tempPath("lake")
     new java.io.File(path).mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/lineitem.parquet"),
@@ -49,7 +41,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming json and csv sources: tailed aggregates match batch") {
-    val base = s"/tmp/graft-textsrc-${System.nanoTime()}"
+    val base = tempPath("textsrc")
     val jsonDir = s"$base/json"; val csvDir = s"$base/csv"
     new java.io.File(jsonDir).mkdirs(); new java.io.File(csvDir).mkdirs()
     java.nio.file.Files.writeString(
@@ -82,7 +74,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned sink: reads prune partitions (scan shows filters)") {
-    val dir = s"/tmp/graft-part-${System.nanoTime()}"
+    val dir = tempPath("part")
     val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_quantity", "l_returnflag")
     EventSources.writePartitioned(df, dir, Seq("l_returnflag"))
@@ -101,7 +93,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ts(sec: Int) = new java.sql.Timestamp(1700000000000L + sec * 1000L)
     val ps = new PubSub(spark)
     val t = ps.topic[Double]("to-lake")
-    val out = s"/tmp/graft-lakeout-${System.nanoTime()}"
+    val out = tempPath("lakeout")
     val agg = TemporalOps.batchSum[Double]("10 seconds")(t.stream)
       .withColumn("day", date_format(col("window_start"), "yyyy-MM-dd"))
     val q = agg.writeStream.outputMode("append")

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
@@ -15,14 +12,9 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
   * results to the Scala API (same Expression underneath). Runs on the
   * sf0.001 fixture so values are real, not toy.
   */
-class SqlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlFunctionsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def assertParity(sqlExpr: String, dsl: org.apache.spark.sql.Column,
       table: String = "documents"): Unit = {

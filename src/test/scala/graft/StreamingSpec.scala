@@ -4,11 +4,10 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions, Stamp}
+import graft.core.{EventEnvelope, Stamp}
 import graft.streaming._
 
 /** Streaming behavior parity tests, mirroring the reference's Ginkgo
@@ -16,17 +15,7 @@ import graft.streaming._
   * pkg/events/selection_policy_test.go, pkg/pubsub/pub_sub_test.go) with
   * processAllAvailable() standing in for Gomega Eventually (SURVEY §5).
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 

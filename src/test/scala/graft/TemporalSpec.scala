@@ -4,12 +4,11 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Temporal-window streaming parity (reference:
@@ -18,17 +17,7 @@ import graft.streaming._
   * trigger event to close the last window, exactly as the reference's
   * data-driven punctuation requires).
   */
-class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-ckpt-t-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = {
-    QueryRepository.closeAll()
-    spark.stop()
-  }
+class TemporalSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L // epoch-aligned test clock
   private def ts(sec: Int) = new Timestamp(base + sec * 1000L)

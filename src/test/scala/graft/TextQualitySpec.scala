@@ -1,24 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Sessions
 import graft.queries.TextQueries
 
 /** Planted-row semantics for the repetition quality filters and the PII /
   * identifier scrubbing query (both also oracle-checked on the fixture via
   * the driver gate; this pins the metric math on hand-constructed inputs).
   */
-class TextQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextQualitySpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = s"/tmp/graft-textquality-${System.nanoTime()}"
+    val d = tempPath("textquality")
     Seq(
       (1L, "a a a a a a a a a a", "en", "srcA", 19L),
       (2L, "the quick brown fox jumps over a lazy dog", "en", "srcA", 41L),
@@ -33,8 +29,6 @@ class TextQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(s"$d/customer.parquet")
     d
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("q_repetition: planted repetitive doc is dropped, diverse doc kept") {
     val rows = TextQueries.defs("q_repetition").build(spark, dir)

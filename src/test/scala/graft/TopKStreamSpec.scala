@@ -4,11 +4,10 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{EventEnvelope, Sessions}
+import graft.core.EventEnvelope
 import graft.streaming._
 
 /** Streaming per-window top-k (StatefulOps.topKByWindow): exact counts
@@ -16,14 +15,7 @@ import graft.streaming._
   * window when the watermark passes its end, deterministic
   * (count desc, value asc) rank order, late events dropped.
   */
-class TopKStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-topk-${System.nanoTime()}"), 4).getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TopKStreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val base = 1700000000000L // window-grid aligned (10s windows)
   private def ts(sec: Int) = new Timestamp(base + sec * 1000L)
@@ -114,7 +106,7 @@ class TopKStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ps = new PubSub(spark)
     val t = ps.topic[String](s"topk-restart-${System.nanoTime()}")
     val out = StatefulOps.topKByWindow(10000L, 2)(t.stream)
-    val ckpt = s"/tmp/graft-topk-ckpt-${System.nanoTime()}"
+    val ckpt = tempPath("topk-ckpt")
     val buf = mutable.Buffer.empty[TopKRow]
     def start() = out.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)

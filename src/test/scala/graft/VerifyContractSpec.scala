@@ -3,10 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.core.Sessions
 
 /** The Verify failure contract: a throwing query must show up LOUDLY in
   * the dump — as an `__error` marker parquet (so the driver's DuckDB
@@ -15,17 +12,14 @@ import graft.core.Sessions
   * exactly this way (events fixture regression + swallow-and-log-only
   * error handling); this spec is the regression pin for the fix.
   */
-class VerifyContractSpec extends AnyFunSuite with BeforeAndAfterAll {
+class VerifyContractSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession =
-    Sessions.tune(SparkSession.builder().master("local[2]"), 2).getOrCreate()
+  override protected def cores = 2
   import spark.implicits._
-
-  override def afterAll(): Unit = spark.stop()
 
   test("a throwing query leaves an __error marker and an errors.json " +
       "entry; healthy queries dump normally") {
-    val out = Files.createTempDirectory("verify-contract").toString
+    val out = tempPath("verify-contract")
     val qs = Map[String, (SparkSession, String) => DataFrame](
       "q_ok" -> ((s, _) => { import s.implicits._; Seq(1, 2).toDF("x") }),
       "q_boom" -> ((_, _) =>

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 
 /** Stage-level cost breakdown for q_corpus_build (guide §1.1/§7.1): times
   * each composed stage in isolation with the bench's own methodology
@@ -50,10 +50,11 @@ object CorpusBuildProfile {
       }),
       "cands_through_distinct" -> ((s: SparkSession, dir: String) => {
         import graft.functions.TextFunctions
-        val sets = graft.core.CacheHygiene.pinMaterialized(
+        val sets = Materialize.pin(
           graft.queries.Tables.load(s, dir, "documents")
             .select(col("doc_id"), array_distinct(
-              TextFunctions.wordShingles(col("text"), 5)).as("sh")))
+              TextFunctions.wordShingles(col("text"), 5)).as("sh")),
+          eager = true)
         val ex0 = sets.select(col("doc_id"), explode(col("sh")).as("s0"))
           .select(col("doc_id"), xxhash64(col("s0")).as("s"))
         val hot = ex0.groupBy("s").agg(count(lit(1)).as("df"))
@@ -63,7 +64,7 @@ object CorpusBuildProfile {
             col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
           .distinct()
-        graft.core.CacheHygiene.unpersistAfterFirstUse(sets, cands)
+        Materialize.releaseAfterFirstUse(cands, sets)
       }),
       // q_heavy_hitters stage split (VERDICT r19 item 8): the CMS grid
       // pass alone vs the candidate (distinct+probe) pass alone vs the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.functions.VectorFunctions
 import graft.operators.Ann
 
@@ -59,18 +59,16 @@ object LshTuneBench {
 
     val sizes = (0 to quadruplings).map(k => nBase << (2 * k))
     val rows = sizes.map { n =>
-      val emb = corpus(n).cache()
-      emb.count()
+      val emb = Materialize.pin(corpus(n), eager = true)
       val plan = Ann.lshPlan(n, threshold = 0.95)
       val fixedVol = candidateVolume(emb, 16, 8)
       val autoVol = candidateVolume(emb, plan.nBands, plan.bitsPerBand)
-      emb.unpersist()
+      Materialize.free(emb)
       (n, fixedVol, autoVol, plan)
     }
     // wall-time anchor: the candidate volumes above are the dominant
     // cost; confirm the operator tracks them
-    val embSmall = corpus(anchorN).cache()
-    embSmall.count()
+    val embSmall = Materialize.pin(corpus(anchorN), eager = true)
     def timedRun(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
       val r = f
@@ -82,7 +80,7 @@ object LshTuneBench {
     val (autoSec, autoPairs) = timedRun(
       Ann.nearDupPairsAuto(embSmall, dim, 0.95,
         maxBucket = Long.MaxValue).count())
-    embSmall.unpersist()
+    Materialize.free(embSmall)
 
     val perSize = rows.map { case (n, fv, av, p) =>
       s"""{"n":$n,"fixed_16x8_cands":$fv,"auto_cands":$av,""" +

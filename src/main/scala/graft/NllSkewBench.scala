@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 
 /** Head-key skew measurement for the bigram-LM head-total stage (VERDICT
   * r18 item 9): stopword head tokens concentrate bigrams, so the stage
@@ -38,14 +38,13 @@ object NllSkewBench {
     // synthetic per-bigram counts: hotPct% of rows head on "the", the
     // rest spread over 64k cold heads; every bg is distinct (the cb
     // frame's shape after its groupBy)
-    val cb = spark.range(0L, nRows, 1L, cpus * 4)
+    val cb = Materialize.checkpoint(spark.range(0L, nRows, 1L, cpus * 4)
       .select(
         when(pmod(col("id"), lit(100)) < hotPct, lit("the"))
           .otherwise(concat(lit("h"), pmod(col("id"), lit(65536))))
           .as("h"),
         concat(lit("bg"), col("id")).as("bg"),
-        (pmod(col("id"), lit(7)) + 1).as("nb"))
-      .localCheckpoint()
+        (pmod(col("id"), lit(7)) + 1).as("nb")), eager = true)
 
     def timed(f: => Unit): Double = {
       spark.catalog.clearCache()

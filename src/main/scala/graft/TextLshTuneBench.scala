@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.operators.Ann
 import graft.queries.Tables
@@ -47,17 +47,16 @@ object TextLshTuneBench {
         .head().getLong(0)
 
     val rows = dirs.map { dir =>
-      val sets = Tables.load(spark, dir, "documents")
+      val sets = Materialize.pin(Tables.load(spark, dir, "documents")
         .select(col("doc_id"),
           array_distinct(TextFunctions.wordShingles(col("text"), 5))
-            .as("sh"))
-        .cache()
+            .as("sh")), eager = false)
       val n = sets.count()
       val plan = Ann.lshPlanJaccard(n, 0.8)
       val fixedVol = candidateVolume(sets, 64, 16)
       val autoVol = candidateVolume(sets,
         plan.bitsPerBand * plan.nBands, plan.nBands)
-      sets.unpersist()
+      Materialize.free(sets)
       (dir, n, fixedVol, autoVol, plan)
     }
     val body = rows.map { case (dir, n, fv, av, pl) =>

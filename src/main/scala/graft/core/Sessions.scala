@@ -166,12 +166,12 @@ object Sessions {
 
   /** Quiet the "RDD was locally checkpointed, its lineage has been
     * truncated and cannot be recomputed after unpersisting" WARN spam.
-    * The two-generation checkpoint discipline (Components / Bpe /
-    * CacheHygiene) unpersists SUPERSEDED generations on purpose — the
-    * data is never referenced again, so the warning describes intended
-    * behavior, and at bench scale it floods the tail of the log the
-    * driver captures. Scoped to the org.apache.spark.rdd category only
-    * (scheduler/storage warnings stay on).
+    * The two-generation checkpoint discipline (Components / Bpe / Ann,
+    * through Materialize.free) unpersists SUPERSEDED generations on
+    * purpose — the data is never referenced again, so the warning
+    * describes intended behavior, and at bench scale it floods the tail
+    * of the log the driver captures. Scoped to the org.apache.spark.rdd
+    * category only (scheduler/storage warnings stay on).
     */
   def quietSupersededCheckpointWarnings(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(

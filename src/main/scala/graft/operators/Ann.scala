@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.VectorFunctions
 import graft.queries.Det
 
@@ -161,15 +162,14 @@ object Ann {
     // counts, persist this frame MEMORY_AND_DISK_SER instead of the
     // default — the rows are a long array plus scalars, which
     // serialize compactly.
-    val banded = emb.select(col("vec_id"),
+    val banded = Materialize.pin(emb.select(col("vec_id"),
         VectorFunctions.hyperplaneBands(
           col("embedding"), dim, nBands, bitsPerBand, seed).as("bhs"))
       .select(col("vec_id"),
         transform(col("bhs"), bh => bh.getField("h")).as("sigs"),
         explode(col("bhs")).as("bh"))
       .select(col("vec_id"), col("sigs"),
-        col("bh.band").as("band"), col("bh.h").as("h"))
-      .cache()
+        col("bh.band").as("band"), col("bh.h").as("h")), eager = false)
     // Hot-bucket guard — LOUD, never a silent quadratic (the semDedup
     // principle). Two distinct causes land here and NEITHER has a
     // silent repair: (a) under-resolved LSH — for fixed bitsPerBand
@@ -183,33 +183,31 @@ object Ann {
     // duplicate clusters, the ones dedup exists for. The probe rides
     // the cache the self-join was about to materialize anyway
     // (measured on semDedup: the count itself is noise; it was the
-    // string keys that cost 1.8x there).
-    val hot = banded.groupBy(col("band"), col("h"))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket)
-      .orderBy(col("n").desc).limit(5)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    if (hot.nonEmpty) {
-      // the probe collect above has already materialized the cache; the
-      // guard must release it before aborting or every trip in a
-      // long-lived session pins one banded projection in executor
-      // storage forever (the exact accumulation the unpersist-after-
-      // first-use contract below exists to prevent)
-      banded.unpersist()
-      val worst = hot.map { case (b, h, n) => s"band=$b h=$h ($n)" }
-        .mkString(", ")
-      throw new IllegalStateException(
-        s"nearDupPairs: LSH bucket(s) above maxBucket=$maxBucket " +
-          s"(worst: $worst). Expected bucket size is ~N/2^bitsPerBand, " +
-          "so candidate pairs grow ~N²/2^bits for FIXED bits — at this " +
-          "corpus size the LSH is under-resolved. Fixes, in order: " +
-          "(1) raise bitsPerBand to ~log2(N/1024) (more resolution per " +
-          "band; add bands to hold recall); (2) for genuinely dense " +
-          "near-identical clusters — which owe c²/2 output pairs by " +
-          "this operator's CONTRACT and cannot be split away — use the " +
-          "keeper-form dedup (Ann.semDedup / q_dedup_keepers); " +
-          "(3) raise maxBucket to opt into the quadratic output " +
-          "deliberately.")
+    // string keys that cost 1.8x there). The probe materializes the
+    // cache, so a guard trip frees it: otherwise every trip in a
+    // long-lived session would pin one banded projection for good.
+    Materialize.freeOnThrow(banded) {
+      val hot = banded.groupBy(col("band"), col("h"))
+        .agg(count(lit(1)).as("n"))
+        .where(col("n") > maxBucket)
+        .orderBy(col("n").desc).limit(5)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      if (hot.nonEmpty) {
+        val worst = hot.map { case (b, h, n) => s"band=$b h=$h ($n)" }
+          .mkString(", ")
+        throw new IllegalStateException(
+          s"nearDupPairs: LSH bucket(s) above maxBucket=$maxBucket " +
+            s"(worst: $worst). Expected bucket size is ~N/2^bitsPerBand, " +
+            "so candidate pairs grow ~N²/2^bits for FIXED bits — at this " +
+            "corpus size the LSH is under-resolved. Fixes, in order: " +
+            "(1) raise bitsPerBand to ~log2(N/1024) (more resolution per " +
+            "band; add bands to hold recall); (2) for genuinely dense " +
+            "near-identical clusters — which owe c²/2 output pairs by " +
+            "this operator's CONTRACT and cannot be split away — use the " +
+            "keeper-form dedup (Ann.semDedup / q_dedup_keepers); " +
+            "(3) raise maxBucket to opt into the quadratic output " +
+            "deliberately.")
+      }
     }
     // min-band emission: a colliding pair is kept only in the first
     // band where its hashes agree, so each pair reaches the distinct
@@ -243,7 +241,7 @@ object Ann {
     // a long-lived session calling this repeatedly must not accumulate
     // executor storage (the cache exists only to share the projection
     // between the self-join's two sides within one action)
-    graft.core.CacheHygiene.unpersistAfterFirstUse(banded, result)
+    Materialize.releaseAfterFirstUse(result, banded)
   }
 
   /** A sized hyperplane-LSH band scheme: `bitsPerBand` resolves buckets
@@ -588,19 +586,19 @@ object Ann {
     // co-partition the mining self-join — the join's two identical
     // exchanges are already shared at runtime, so the explicit
     // repartition only ADDED a shuffle: 1.04 s -> 1.32 s at sf0.1.)
-    val assigned = emb.crossJoin(broadcast(centroidsRow(centroids)))
-      .select(col("vec_id"), col("embedding"),
-        bestCell(col("embedding"), col("cents")).as("m"))
-      .where(col("m").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        (-col("m.negid")).as("cell_id"), col("m.aff").as("aff"))
-      .cache()
+    val assigned = Materialize.pin(
+      emb.crossJoin(broadcast(centroidsRow(centroids)))
+        .select(col("vec_id"), col("embedding"),
+          bestCell(col("embedding"), col("cents")).as("m"))
+        .where(col("m").isNotNull)
+        .select(col("vec_id"), col("embedding"),
+          (-col("m.negid")).as("cell_id"), col("m.aff").as("aff")),
+      eager = false)
     // refineCells' population probes materialize the cache before its
     // irreducible-cell guard can throw — release on the failure path or
     // each guard trip pins one assignment frame in executor storage
-    val (reps, forcedDrops, roundCkpts) =
-      try refineCells(assigned, thresholdQ, maxCellSize)
-      catch { case e: Throwable => assigned.unpersist(); throw e }
+    val (reps, forcedDrops) = Materialize.freeOnThrow(assigned)(
+      refineCells(assigned, thresholdQ, maxCellSize))
     val x = reps.select(col("pair_key"), col("vec_id").as("a"),
       col("embedding").as("ea"), col("aff").as("affa"))
     val y = reps.select(col("pair_key"), col("vec_id").as("b"),
@@ -620,9 +618,10 @@ object Ann {
       .join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell_id"),
         coalesce(col("d"), lit(0L)).as("dropped"))
-    graft.core.CacheHygiene.releaseAfterFirstUse(
-      graft.core.CacheHygiene.unpersistAfterFirstUse(assigned, result))(
-      () => roundCkpts.foreach(Components.freeCheckpoint))
+    // only the assignment PIN goes after the first action: the split
+    // rounds' checkpoints are still read by `result` (through reps) and
+    // cannot be recomputed, so they are left to the ContextCleaner
+    Materialize.releaseAfterFirstUse(result, assigned)
   }
 
   /** Hot-cell cap for [[semDedup]]: pair work per cell is c²/2 exact
@@ -651,21 +650,19 @@ object Ann {
   private val SemSplitMaxDepth = 4
 
   /** The hot-cell repair pass of [[semDedup]] (exposed for AnnSpec):
-    * returns (reps, forcedDrops, roundCheckpoints) where reps carries
-    * every surviving
+    * returns (reps, forcedDrops) where reps carries every surviving
     * pair-mining participant with its refinement key `pair_key` (==
     * cell_id as string when nothing was hot — the zero-cost common
     * case, one count aggregation and no plan change) and forcedDrops
     * is the exact-duplicate non-representatives already known dropped.
     * Guarantees on return: every pair_key population <= maxCellSize,
     * or an IllegalStateException named the irreducible cells (with
-    * every round checkpoint freed first). roundCheckpoints are the
-    * per-round localCheckpoint frames still referenced by reps'
-    * lineage — the CALLER frees them (Components.freeCheckpoint) once
-    * its derived result has materialized.
+    * every round checkpoint freed first). reps reads the per-round
+    * checkpoints, so on return they stay live for as long as reps or a
+    * frame derived from it does (see [[graft.core.Materialize]]).
     */
   private[graft] def refineCells(assigned: DataFrame, thresholdQ: Long,
-      maxCellSize: Long): (DataFrame, Option[DataFrame], Seq[DataFrame]) = {
+      maxCellSize: Long): (DataFrame, Option[DataFrame]) = {
     require(maxCellSize >= 16, s"maxCellSize=$maxCellSize too small to split")
     def hotOf(df: DataFrame): Array[(String, Long)] =
       df.groupBy(col("pair_key")).agg(count(lit(1)).as("n"))
@@ -680,7 +677,7 @@ object Ann {
     // work is one count shuffle over (cell_id) pairs.
     var reps = assigned.withColumn("pair_key", col("cell_id"))
     var hot = hotOf(reps)
-    if (hot.isEmpty) return (reps, None, Nil)
+    if (hot.isEmpty) return (reps, None)
     // Something is hot: move to string refinement keys ("cell/sub/...")
     // for the split machinery below.
     reps = assigned.withColumn("pair_key", col("cell_id").cast("string"))
@@ -719,10 +716,10 @@ object Ann {
     while (hot.nonEmpty && depth < SemSplitMaxDepth) {
       val isHot = col("pair_key").isInCollection(hot.map(_._1))
       val (splitDf, splitTmp) = splitHotCells(reps.where(isHot))
-      val mat = splitDf.localCheckpoint() // eager: this round is material
+      val mat = Materialize.checkpoint(splitDf, eager = true)
       // the round's internal checkpoints (embD, final sub-centroids)
       // are superseded the moment the round output materializes
-      splitTmp.foreach(Components.freeCheckpoint)
+      splitTmp.foreach(Materialize.free)
       roundCkpts += mat
       reps = reps.where(!isHot).unionByName(mat)
       depth += 1
@@ -731,8 +728,8 @@ object Ann {
     if (hot.nonEmpty) {
       // the throw abandons reps — nothing will ever read the round
       // checkpoints again, so free them here (the assignment cache is
-      // released by semDedup's catch)
-      roundCkpts.foreach(Components.freeCheckpoint)
+      // released by semDedup's freeOnThrow)
+      roundCkpts.foreach(Materialize.free)
       val worst = hot.sortBy(-_._2).take(5)
         .map { case (k, n) => s"$k($n)" }.mkString(", ")
       throw new IllegalStateException(
@@ -744,7 +741,7 @@ object Ann {
           "(Ann.kmeansTrain), raise maxCellSize, or pre-quantize the " +
           "embeddings.")
     }
-    (reps, forced, roundCkpts.toSeq)
+    (reps, forced)
   }
 
   /** Keyed Lloyd sub-split: partition every hot pair_key SemSplitK ways
@@ -763,9 +760,9 @@ object Ann {
     // the seed window all read this frame — uncheckpointed, the
     // filter + float->double transform re-executes SemSplitIters+2
     // times per round (values unchanged by materialization)
-    val embD = members.select(col("pair_key"), col("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-      .localCheckpoint()
+    val embD = Materialize.checkpoint(members.select(col("pair_key"),
+      col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),
+      eager = true)
     def assignTo(cent: DataFrame): DataFrame = {
       val cn = cent.withColumn("cn",
         VectorFunctions.dot(col("cvec"), col("cvec")))
@@ -778,11 +775,11 @@ object Ann {
           min(struct(col("dq"), col("sub"))).as("m"))
     }
     val seedW = Window.partitionBy(col("pair_key")).orderBy(col("vec_id"))
-    var cent = embD.withColumn("rn", row_number().over(seedW))
-      .where(col("rn") <= SemSplitK)
-      .select(col("pair_key"), (col("rn") - 1).cast("long").as("sub"),
-        col("v").as("cvec"))
-      .localCheckpoint()
+    var cent = Materialize.checkpoint(
+      embD.withColumn("rn", row_number().over(seedW))
+        .where(col("rn") <= SemSplitK)
+        .select(col("pair_key"), (col("rn") - 1).cast("long").as("sub"),
+          col("v").as("cvec")), eager = true)
     for (_ <- 0 until SemSplitIters) {
       val prev = cent
       val next = assignTo(cent)
@@ -796,13 +793,13 @@ object Ann {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("cx")))),
           s => s.getField("cx")).as("cvec"))
-      cent = next.unionByName(
+      cent = Materialize.checkpoint(next.unionByName(
         cent.join(next.select("pair_key", "sub"), Seq("pair_key", "sub"),
-          "left_anti")).localCheckpoint()
+          "left_anti")), eager = true)
       // the new generation is material (eager checkpoint) and carries
       // every surviving centroid forward — the superseded generation's
       // blocks can go now instead of waiting on the context cleaner
-      Components.freeCheckpoint(prev)
+      Materialize.free(prev)
     }
     val asg = assignTo(cent)
       .select(col("vec_id"), col("m.sub").as("sub"))

@@ -5,6 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.expressions.{BpeEncode, BpeMergeAdjacent}
 import graft.functions.TextFunctions
 
@@ -138,9 +139,8 @@ object Bpe {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     require(maxBatch >= 1, "maxBatch must be >= 1")
     // truncate the corpus lineage once — rounds re-plan from this table
-    var syms = wordCounts
-      .select(col("cnt"), split(col("word"), "").as("syms"))
-      .localCheckpoint()
+    var syms = Materialize.checkpoint(wordCounts
+      .select(col("cnt"), split(col("word"), "").as("syms")), eager = true)
     var lastCheckpoint = syms
     val merges = new ArrayBuffer[Merge](nMerges)
     var lastCpAt = 0
@@ -164,15 +164,15 @@ object Bpe {
           syms = syms.withColumn("syms", BpeMergeAdjacent(col("syms"), l, r))
         }
         if (merges.size - lastCpAt >= checkpointEvery) {
-          val cp = syms.localCheckpoint()
-          Components.freeCheckpoint(lastCheckpoint)
+          val cp = Materialize.checkpoint(syms, eager = true)
+          Materialize.free(lastCheckpoint)
           lastCheckpoint = cp
           syms = cp
           lastCpAt = merges.size
         }
       }
     }
-    Components.freeCheckpoint(lastCheckpoint)
+    Materialize.free(lastCheckpoint)
     (merges.toSeq, rounds)
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Connected components over an undirected edge list — the near-dup
   * CONSOLIDATION step: pair-mining (shingle/MinHash/SimHash/embedding
   * paths) says which documents match; components turn matches into a
@@ -24,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Free the storage blocks behind an eager localCheckpoint. A plain
-    * `unpersist()` does nothing here — the checkpointed frame is a
-    * LogicalRDD, so the pinned blocks belong to its RDD, not to the
-    * CacheManager. Only call on frames no other live frame derives from:
-    * a checkpoint's lineage is truncated, so freed blocks cannot be
-    * recomputed.
-    */
-  private[operators] def freeCheckpoint(df: DataFrame): Unit = {
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-    ()
-  }
-
   /** (doc_id, component_id) for every vertex of `edges` (columns a, b).
     * component_id = min doc_id reachable, i.e. the cluster
     * representative.
@@ -45,9 +33,9 @@ object Components {
     * Storage discipline: superseded label generations are freed as soon
     * as the next one materializes, so the loop holds at most two label
     * checkpoints (plus the symmetrized edges) at any moment instead of
-    * one per round. The RETURNED frame stays pinned — it is the caller's
-    * live result; a long-lived session drops it with
-    * `spark.catalog.clearCache()` or by letting the session end.
+    * one per round. The RETURNED frame reads the last generation, so
+    * that checkpoint is left to Spark's ContextCleaner (see
+    * [[graft.core.Materialize]]).
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
     // Symmetrize with ONE pass over the mining plan: exploding each
@@ -56,12 +44,11 @@ object Components {
     // checkpoint job — the old checkpoint(directed) + union-of-two-
     // branches form paid a second materialization job for the same id
     // pairs (guide §2.4: do fewer passes).
-    val sym = edges
+    val sym = Materialize.checkpoint(edges
       .select(explode(array(
         struct(col("a"), col("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .localCheckpoint()
+      .select(col("e.a").as("a"), col("e.b").as("b")), eager = true)
     // Label init fused with round 1: every vertex appears as `a` in the
     // symmetrized list, so one aggregation both enumerates the vertex
     // set (the old distinct) and computes round 1's propagation result
@@ -71,11 +58,11 @@ object Components {
     // identity labeling after one round assigns exactly
     // min(v, min over neighbors) to v.
     val obs0 = Observation()
-    var labels = sym.groupBy(col("a"))
+    var labels = Materialize.checkpoint(sym.groupBy(col("a"))
       .agg(least(min(col("b")), col("a")).as("label"))
       .select(col("a").as("doc_id"), col("label"))
-      .observe(obs0, sum(col("label").cast("decimal(38,0)")).as("s"))
-      .localCheckpoint()
+      .observe(obs0, sum(col("label").cast("decimal(38,0)")).as("s")),
+      eager = true)
     // Convergence signal: per-vertex labels are non-increasing under min
     // propagation and the vertex set is fixed, so sum(label) is strictly
     // decreasing until the fixpoint and constant at it. Observed DURING
@@ -94,20 +81,20 @@ object Components {
     while (changed) {
       rounds += 1
       val obs = Observation()
-      val prop = labels.as("l")
+      val prop = Materialize.checkpoint(labels.as("l")
         .join(sym.as("e"), col("l.doc_id") === col("e.a"))
         .select(col("e.b").as("doc_id"), col("l.label"))
         .union(labels)
         .groupBy("doc_id").agg(min("label").as("label"))
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("s"))
-        .localCheckpoint()
+        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("s")),
+        eager = true)
       val roundSum = obs.get("s")
       changed = !prevSum.contains(roundSum)
       prevSum = Some(roundSum)
-      freeCheckpoint(labels) // superseded generation — prop is material
+      Materialize.free(labels) // superseded generation — prop is material
       labels = prop
     }
-    freeCheckpoint(sym) // the fixpoint labels no longer need the edges
+    Materialize.free(sym) // the fixpoint labels no longer need the edges
     // one line of driver-side observability: with the init fused as
     // round 1 and its sum observed, loop rounds = propagation diameter
     // (the last round doubles as the fixpoint confirmation)

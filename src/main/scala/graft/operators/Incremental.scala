@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 import graft.queries.Det
 
@@ -69,14 +70,12 @@ object Incremental {
     // union shingle index (production: persisted, with DF statistics)
     val all = ex.select(col("doc_id"), lit(true).as("oe"), col("text"))
       .unionByName(dl.select(col("doc_id"), lit(false).as("oe"), col("text")))
-    // pinMaterialized, not bare cache(): the delta-probes-index
-    // equi-join below is the jaccardPairs candidate shape, and its
-    // scan-derived size estimate walks under the broadcast threshold
-    // at corpus scale (the mult=300 8 GiB broadcast-abort class —
-    // see CacheHygiene.pinMaterialized)
-    val sets = graft.core.CacheHygiene.pinMaterialized(
+    // eager pin: the delta-probes-index equi-join below (the
+    // jaccardPairs candidate shape) plans on measured size
+    val sets = Materialize.pin(
       all.select(col("doc_id"), col("oe"),
-        array_distinct(TextFunctions.wordShingles(col("text"), nGram)).as("sh")))
+        array_distinct(TextFunctions.wordShingles(col("text"), nGram)).as("sh")),
+      eager = true)
     // candidate probes join on 64-bit shingle hashes (8-byte shuffle
     // keys, not 5-gram strings); false candidates from a collision are
     // removed by the exact string-set verification below — the
@@ -126,6 +125,6 @@ object Incremental {
           .when(col("f_ne"), "near_dup_existing")
           .when(col("f_ni"), "near_dup_internal")
           .otherwise("accepted").as("decision"))
-    graft.core.CacheHygiene.unpersistAfterFirstUse(sets, result)
+    Materialize.releaseAfterFirstUse(result, sets)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Scale-safe global cumulative sum (the sequence-packing primitive).
   *
   * A naive `Window.orderBy(key)` cumsum plans a single-partition
@@ -83,10 +85,9 @@ object Packing {
     // Unlike cache(), the checkpoint is not advisory (no
     // eviction-triggered recompute) and does not linger in CacheManager
     // for later identical plans to silently reuse.
-    val input = df
+    val input = Materialize.checkpoint(df
       .withColumn("__val", valueCol.cast("long"))
-      .withColumn("__key", orderKey.cast("double"))
-      .localCheckpoint()
+      .withColumn("__key", orderKey.cast("double")), eager = true)
 
     // Equi-depth boundaries, frozen as literals; dedup guards
     // degenerate (few-distinct-keys) input.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.{Aggregators, TextFunctions}
 
 /** Training-data pipeline mechanics: vocabulary stats, deterministic
@@ -61,10 +62,9 @@ object PipelineQueries {
         // closure-capture contract, pinned by AnalyticsSpec); the vocab
         // materializes once inside the first action and both the grid
         // and probe branches read that one copy
-        val tf = Tables.load(s, dir, "documents")
+        val tf = Materialize.checkpoint(Tables.load(s, dir, "documents")
           .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-          .groupBy("token").agg(count(lit(1)).as("c"))
-          .localCheckpoint(false)
+          .groupBy("token").agg(count(lit(1)).as("c")), eager = false)
         val buckets = tf.select(col("token"), col("c"),
           posexplode(graft.expressions.CmsBuckets(col("token"),
             CmsDepth, CmsWidth)).as(Seq("r", "b")))
@@ -262,13 +262,11 @@ object PipelineQueries {
           d.select(col("doc_id").as(idAs),
             explode(array_distinct(
               TextFunctions.wordShingles(col("text"), 3))).as("s"))
-        // pinMaterialized: the eval shingles feed the bucket build AND
-        // the exact verification join, and that join must be planned
-        // against the eval frame's TRUE exploded size (the scan-derived
-        // estimate ignores the shingle fan-out — the q_dup_spans
-        // cold-stats hazard); released after the first action
-        val ev = graft.core.CacheHygiene.pinMaterialized(
-          sh(docs.where(col("source") === "src19"), "eval_doc"))
+        // eager pin: the eval shingles feed the bucket build AND the
+        // exact verification join, which plans on their measured
+        // exploded size (the q_dup_spans cold-stats hazard)
+        val ev = Materialize.pin(
+          sh(docs.where(col("source") === "src19"), "eval_doc"), eager = true)
         val tr = sh(docs.where(col("source") =!= "src19"), "train_doc")
         val buckets = ev
           .select(pmod(xxhash64(col("s")), lit(1048576L)).as("b")).distinct()
@@ -279,7 +277,7 @@ object PipelineQueries {
           .groupBy("train_doc", "eval_doc")
           .agg(count(lit(1)).as("n_shared"))
           .where(col("n_shared") >= 2)
-        graft.core.CacheHygiene.unpersistAfterFirstUse(ev, result)
+        Materialize.releaseAfterFirstUse(result, ev)
       },
       Some("""WITH docs AS (
           SELECT doc_id, source, list_distinct(list_transform(

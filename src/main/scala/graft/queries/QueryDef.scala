@@ -69,6 +69,11 @@ object Det {
             * CAST(power(16, 11 - j) AS BIGINT))) AS BIGINT)"""
 }
 
+/** Fixture tables. Contract: `documents.doc_id` is non-null and unique.
+  * q_corpus_build's exact-dedup keeper keeps every row whose doc_id is
+  * the min of its digest group, so a duplicate or null doc_id would let
+  * two copies survive. FixtureSchemaSpec pins it on the fixtures.
+  */
 object Tables {
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

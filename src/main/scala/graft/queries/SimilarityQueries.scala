@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 
 /** Deduplication and similarity-search queries — the training-data-pipeline
@@ -85,13 +86,9 @@ object SimilarityQueries {
     * with document frequency <= MaxShingleDf.
     */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    // pinMaterialized, not bare cache(): the exploded-hash self-join
-    // below must be planned against the shingle sets' TRUE size — the
-    // scan-derived estimate walks under the broadcast threshold at
-    // corpus scale and plans a corpus-sized broadcast build (aborted
-    // at the 8 GiB hard limit on the mult=300 fixture; see
-    // CacheHygiene.pinMaterialized)
-    val sets = graft.core.CacheHygiene.pinMaterialized(shingleSets(s, dir))
+    // eager pin: the exploded-hash self-join below plans on the
+    // shingle sets' measured size, not the explode-blind scan estimate
+    val sets = Materialize.pin(shingleSets(s, dir), eager = true)
     // Candidate generation runs on 64-BIT SHINGLE HASHES, not shingle
     // strings: the DF count groups by hash and the self-join shuffles
     // (doc_id, 8-byte key) rows instead of (doc_id, ~30-byte 5-gram) —
@@ -132,7 +129,7 @@ object SimilarityQueries {
         (col("na") + col("nb") - col("inter"))))
       .withColumn("j", col("jq") / 10000)
       .drop("sha", "shb")
-    graft.core.CacheHygiene.unpersistAfterFirstUse(sets, result)
+    Materialize.releaseAfterFirstUse(result, sets)
   }
 
   /** Profiling accessor (CorpusBuildProfile): the thresholded pair graph
@@ -183,8 +180,8 @@ object SimilarityQueries {
     */
   private[graft] def jaccardStarEdges(s: SparkSession, dir: String,
       minJQ: Long): DataFrame =
-    jaccardStarEdgesFrom(graft.core.CacheHygiene.pinMaterialized(
-      shingleSets(s, dir)), minJQ)
+    jaccardStarEdgesFrom(Materialize.pin(shingleSets(s, dir), eager = true),
+      minJQ)
 
   /** [[jaccardStarEdges]] over a caller-supplied (doc_id, sh) frame —
     * the spec-facing form. `sets` must already be materialized/pinned
@@ -206,7 +203,7 @@ object SimilarityQueries {
       .withColumn("jq", Det.r4q(HashFunctions.jaccard(col("sha"), col("shb"))))
       .where(col("jq") >= minJQ)
       .select(col("a"), col("b"), (col("jq") / 10000).as("j"))
-    graft.core.CacheHygiene.unpersistAfterFirstUse(sets, result)
+    Materialize.releaseAfterFirstUse(result, sets)
   }
 
   /** DuckDB twin of [[jaccardStarEdges]]: string shingles (the fixture
@@ -274,7 +271,7 @@ object SimilarityQueries {
   private[graft] def minhashLshPairs(s: SparkSession, dir: String,
       nPerms: Int, nBands: Int): DataFrame = {
     require(nPerms % nBands == 0, s"nPerms=$nPerms not divisible by $nBands")
-    val sets = shingleSets(s, dir).cache()
+    val sets = Materialize.pin(shingleSets(s, dir), eager = false)
     // Materialize the BANDED projection (not the signature): one
     // cached stage covers both self-join sides, which would
     // otherwise each recompute scan -> shingles -> k-hash signature
@@ -283,18 +280,15 @@ object SimilarityQueries {
     // parquet write instead of a cache.
     val sigs = sets.select(col("doc_id"),
       HashFunctions.minhashSignature(col("sh"), nPerms).as("sig"))
-    // pinMaterialized: the band self-join must plan against the banded
-    // frame's TRUE n×nBands size — the scan-derived estimate ignores
-    // the explode fan-out and plans a corpus-sized broadcast build at
-    // scale (BuildRight on the mult=300 fixture probe; same failure
-    // class as jaccardPairs' 8 GiB abort). Materializing banded also
-    // fills the sets cache (its plan reads through it), so the verify
-    // join-backs below plan on true sizes too.
-    val banded = graft.core.CacheHygiene.pinMaterialized(
+    // eager pin: the band self-join plans on the banded frame's
+    // measured n×nBands size. Materializing banded also fills the sets
+    // cache (its plan reads through it), so the verify join-backs below
+    // plan on true sizes too.
+    val banded = Materialize.pin(
       sigs.select(col("doc_id"),
         explode(HashFunctions.lshBands(col("sig"), nBands, nPerms / nBands))
           .as("bh"))
-        .select(col("doc_id"), col("bh.band"), col("bh.h")))
+        .select(col("doc_id"), col("bh.band"), col("bh.h")), eager = true)
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -308,8 +302,7 @@ object SimilarityQueries {
       .select(col("a"), col("b"), (col("jq") / 10000).as("j"))
     // both pinned stages release on the first action — repeated
     // library use must not accumulate executor storage
-    graft.core.CacheHygiene.unpersistAfterFirstUse(sets,
-      graft.core.CacheHygiene.unpersistAfterFirstUse(banded, result))
+    Materialize.releaseAfterFirstUse(result, banded, sets)
   }
 
   /** [[minhashLshPairs]] with the banding sized by
@@ -882,7 +875,8 @@ object SimilarityQueries {
         // ranked a window whose rows CARRIED text, shuffling the whole
         // corpus' bytes through the md5-keyed exchange just to pick
         // keeper ids. The dup-id set (doc_id != min doc_id of its
-        // digest group — identical keep decision, doc_ids are unique)
+        // digest group — identical keep decision, doc_ids are unique
+        // and non-null: the Tables contract, pinned by FixtureSchemaSpec)
         // anti-joins back on doc_id, the SAME key as the components
         // drop anti-join below: both filters share one partitioning
         // (broadcast anti joins when the dup/drop sets are small), and
@@ -1092,18 +1086,17 @@ object SimilarityQueries {
             HashFunctions.simhash64(TextFunctions.tokens(col("text"))).as("sig"))
         // the pin sits on BLOCKS, not sigs: blocks is the frame both
         // self-join sides reuse (caching sigs still recomputed the 4-way
-        // explode per side), and pinMaterialized makes the block
-        // self-join plan against its true 4n size — the scan-derived
-        // estimate ignores the explode fan-out and keeps this join a
-        // corpus-sized broadcast build at any scale (BuildRight at
-        // mult=300, ~500 MB; the jaccardPairs failure class)
-        val blocks = graft.core.CacheHygiene.pinMaterialized(
+        // explode per side), and the eager pin makes the block
+        // self-join plan on its measured 4n size (the explode-blind
+        // estimate planned BuildRight at mult=300, ~500 MB)
+        val blocks = Materialize.pin(
           sigs.select(col("doc_id"), col("sig"),
             explode(array((0 until 4).map(i =>
               struct(lit(i).as("blk"),
                 shiftrightunsigned(col("sig"), i * 16)
                   .bitwiseAND(0xFFFFL).as("v"))): _*)).as("b"))
-            .select(col("doc_id"), col("sig"), col("b.blk"), col("b.v")))
+            .select(col("doc_id"), col("sig"), col("b.blk"), col("b.v")),
+          eager = true)
         val result = blocks.as("x").join(blocks.as("y"),
             col("x.blk") === col("y.blk") && col("x.v") === col("y.v") &&
               col("x.doc_id") < col("y.doc_id"))
@@ -1111,7 +1104,7 @@ object SimilarityQueries {
             HashFunctions.hamming64(col("x.sig"), col("y.sig")).as("dist"))
           .distinct()
           .where(col("dist") <= 3)
-        graft.core.CacheHygiene.unpersistAfterFirstUse(blocks, result)
+        Materialize.releaseAfterFirstUse(result, blocks)
       },
       Some(simhashOracle)),
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 import graft.operators.Ops
 
@@ -473,11 +474,11 @@ object TextQueries {
         // twice", §8 "decide with small rows"). filter-then-explode vs
         // explode-then-where is multiplicity-preserving, so tf/df/stats
         // are unchanged.
-        val docs = Tables.load(s, dir, "documents")
+        val docs = Materialize.pin(Tables.load(s, dir, "documents")
           .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
           .select(col("doc_id"), size(col("toks")).as("dl"),
-            filter(col("toks"), t => t.isin(terms: _*)).as("qtoks"))
-          .persist()
+            filter(col("toks"), t => t.isin(terms: _*)).as("qtoks")),
+          eager = false)
         val stats = docs.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
         val tf = docs
           .select(col("doc_id"), col("dl"), explode(col("qtoks")).as("token"))
@@ -494,7 +495,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_terms"),
             (sum("c") / 10000.0).as("score"))
           .orderBy(col("score").desc, col("doc_id")).limit(50)
-        graft.core.CacheHygiene.unpersistAfterFirstUse(docs, result)
+        Materialize.releaseAfterFirstUse(result, docs)
       },
       Some(s"""WITH t AS (SELECT doc_id, $oracleTokens AS toks FROM documents),
         d AS (SELECT doc_id, len(toks) AS dl, toks FROM t),
@@ -526,19 +527,15 @@ object TextQueries {
     // shorter than the window emit nothing (documented contract).
     "q_dup_spans" -> QueryDef(
       (s, dir) => {
-        // pinMaterialized, not bare persist(): the frame feeds both the
-        // frequency agg and the join probe (uncached, Catalyst plans the
-        // tokenize+shingle+explode corpus pass twice), AND the join must
-        // be planned against its TRUE cached size — the scan-derived
-        // estimate walks a corpus-sized exploded frame under the
-        // broadcast threshold, plans `freq` as a broadcast build, and at
-        // mult=300 the driver-side build collect aborts on
-        // spark.driver.maxResultSize (same cold-stats hazard as
-        // jaccardPairs; released after the first action as usual)
-        val sh = graft.core.CacheHygiene.pinMaterialized(
+        // eager pin: the frame feeds both the frequency agg and the join
+        // probe, AND the join plans on its measured size (from the scan
+        // estimate, `freq`'s broadcast build aborted on
+        // spark.driver.maxResultSize at mult=300)
+        val sh = Materialize.pin(
           Tables.load(s, dir, "documents")
             .select(col("doc_id"), explode(array_distinct(
-              TextFunctions.wordShingles(col("text"), 8))).as("w")))
+              TextFunctions.wordShingles(col("text"), 8))).as("w")),
+          eager = true)
         val freq = sh.groupBy("w").agg(count(lit(1)).as("nd"))
         val result = sh.join(freq, "w")
           .groupBy("doc_id")
@@ -547,7 +544,7 @@ object TextQueries {
           .select(col("doc_id"), col("n_windows"), col("n_dup"),
             Det.r4(col("n_dup").cast("double") / col("n_windows"))
               .as("dup_frac"))
-        graft.core.CacheHygiene.unpersistAfterFirstUse(sh, result)
+        Materialize.releaseAfterFirstUse(result, sh)
       },
       Some(s"""WITH t AS (SELECT doc_id, list_distinct(list_transform(
             generate_series(1, greatest(len(toks) - 7, 0)),
@@ -570,16 +567,14 @@ object TextQueries {
     // query is shard 0 of that layout.
     "q_postings" -> QueryDef(
       (s, dir) => {
-        // pinMaterialized: feeds the df agg and the rank-capped collect
-        // (two different token-partitioned consumers, no subplan sharing
-        // without it), and the df-join below must plan against the
-        // exploded frame's TRUE size, not the explode-blind scan
-        // estimate (the q_dup_spans maxResultSize abort at mult=300);
-        // released after the first action
-        val sh = graft.core.CacheHygiene.pinMaterialized(
+        // eager pin: feeds the df agg and the rank-capped collect (no
+        // subplan sharing without it), and the df-join below plans on
+        // measured size (the q_dup_spans abort at mult=300)
+        val sh = Materialize.pin(
           Tables.load(s, dir, "documents")
             .select(col("doc_id"), explode(array_distinct(
-              TextFunctions.tokens(col("text")))).as("token")))
+              TextFunctions.tokens(col("text")))).as("token")),
+          eager = true)
         val dfT = sh.groupBy("token").agg(count(lit(1)).as("df"))
         val capped = sh
           .withColumn("rn", row_number().over(
@@ -589,7 +584,7 @@ object TextQueries {
           .agg(array_join(transform(sort_array(collect_list(col("doc_id"))),
             _.cast("string")), ",").as("posting"))
         val result = dfT.join(capped, "token").where(col("df") >= 5)
-        graft.core.CacheHygiene.unpersistAfterFirstUse(sh, result)
+        Materialize.releaseAfterFirstUse(result, sh)
       },
       Some(s"""WITH sh AS (SELECT doc_id, unnest(list_distinct($oracleTokens)) AS token
           FROM documents),
@@ -616,12 +611,12 @@ object TextQueries {
     // count, amortized against the shuffle they feed.
     "q_cdc_chunks" -> QueryDef(
       (s, dir) => {
-        // pinMaterialized for the same two reasons as q_dup_spans: reuse
+        // eager pin for the same two reasons as q_dup_spans: reuse
         // across the frequency agg + join, and a join planned against
         // the chunk frame's measured bytes instead of the scan guess
-        val ch = graft.core.CacheHygiene.pinMaterialized(
+        val ch = Materialize.pin(
           graft.operators.Cdc.chunks(
-            Tables.load(s, dir, "documents"), col("text")))
+            Tables.load(s, dir, "documents"), col("text")), eager = true)
         val freq = ch.distinct()
           .groupBy("chunk_md5").agg(count(lit(1)).as("nd"))
         val result = ch.join(freq, "chunk_md5")
@@ -629,7 +624,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_chunks"),
             sum(when(col("nd") >= 2, 1).otherwise(0)).cast("long")
               .as("n_dup_chunks"))
-        graft.core.CacheHygiene.unpersistAfterFirstUse(ch, result)
+        Materialize.releaseAfterFirstUse(result, ch)
       },
       Some(s"""WITH t AS (SELECT doc_id, $oracleTokens AS toks FROM documents
           WHERE len($oracleTokens) > 0),
@@ -701,8 +696,8 @@ object TextQueries {
         // lazy: the materialization rides the first consuming job
         // (the 1-row totals broadcast build) instead of a separate
         // construction-time job
-        val vocab = tf.groupBy("token").agg(sum("c").as("n"))
-          .localCheckpoint(false)
+        val vocab = Materialize.checkpoint(
+          tf.groupBy("token").agg(sum("c").as("n")), eager = false)
         val nll = vocab
           .crossJoin(broadcast(vocab.agg(sum("n").as("n_total"))))
           .select(col("token"),
@@ -766,9 +761,9 @@ object TextQueries {
         // heads. Same exact long sums, same arithmetic, same rows.
         // lazy checkpoint: materializes inside the head-total broadcast
         // build, not as a separate construction-time job
-        val cb = tf2.groupBy("bg").agg(sum("c").as("nb"))
-          .withColumn("h", element_at(split(col("bg"), " "), 1))
-          .localCheckpoint(false)
+        val cb = Materialize.checkpoint(tf2.groupBy("bg")
+          .agg(sum("c").as("nb"))
+          .withColumn("h", element_at(split(col("bg"), " "), 1)), eager = false)
         val nll = cb
           .join(broadcast(cb.groupBy("h").agg(sum("nb").as("nh"))), "h")
           .select(col("bg"),

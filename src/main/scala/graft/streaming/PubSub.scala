@@ -492,16 +492,7 @@ final class PubSub(val spark: SparkSession) {
           PubSub.intervalMs(length), slideMs, alignToEpoch = true,
           latenessMs = PubSub.intervalMs(lateness))(ds)
     }
-    val q = windows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[WindowBatch[T]], _: Long) =>
-        batch.collect().sortBy(_.windowId)
-          .foreach(w => PubSub.guarded(cb(w))); ()
-      }
-      .start()
-    val s = register(attachSub(q, owner))
-    s.releaseSources = consumerReleaseHook(Seq(ds))
-    s
+    startWindowSink(windows, owner, Seq(ds))(cb)
   }
 
   /** Multi-input batch subscriber — the reference's
@@ -523,6 +514,15 @@ final class PubSub(val spark: SparkSession) {
       PubSub.intervalMs(policy.length), slideMs,
       alignToEpoch = true,
       latenessMs = PubSub.intervalMs(policy.allowedLateness))(inputs)
+    startWindowSink(windows, None, inputs)(cb)
+  }
+
+  /** Both batch subscribers' sink: each micro-batch's windows reach
+    * `cb` in window-id order; close detaches `inputs`' consumers.
+    */
+  private def startWindowSink[T](windows: Dataset[WindowBatch[T]],
+      owner: Option[Topic[T]], inputs: Seq[Dataset[_]])(
+      cb: WindowBatch[T] => Unit): Subscription[T] = {
     val q = windows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[WindowBatch[T]], _: Long) =>
@@ -530,7 +530,7 @@ final class PubSub(val spark: SparkSession) {
           .foreach(w => PubSub.guarded(cb(w))); ()
       }
       .start()
-    val s = register(attachSub[T](q, None))
+    val s = register(attachSub(q, owner))
     s.releaseSources = consumerReleaseHook(inputs)
     s
   }

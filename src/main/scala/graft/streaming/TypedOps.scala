@@ -176,9 +176,11 @@ object TypedOps {
     // at most one surviving (band=0, h) claimant, so the
     // null-skipping first() is deterministic. Cross-micro-batch
     // first-arrival-wins is unchanged (the first arrival claims every
-    // bucket including band 0); intra-batch duplicate arrivals remain
-    // arbitrary exactly as dropDuplicates' intra-batch choice always
-    // was (NearDupStreamSpec's order-invariance pins stay green).
+    // bucket including band 0); among duplicate arrivals inside one
+    // micro-batch the emitted envelope is the band-0 claimant's, not
+    // the earliest event time's — which arrival claims band 0 is
+    // dropDuplicates' arbitrary intra-batch choice (NearDupStreamSpec
+    // pins this as intended).
     banded
       .select(col("event_time"), col("doc_key"), col("band"), col("h"),
         when(col("band") === 0,

@@ -343,7 +343,7 @@ class AnnSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("refineCells is a pure pass-through below the cap") {
     val assigned = hotAssigned
-    val (reps, forced, _) = Ann.refineCells(assigned, 9900L,
+    val (reps, forced) = Ann.refineCells(assigned, 9900L,
       Ann.DefaultMaxCellSize)
     assert(forced.isEmpty)
     val keys = reps.select("pair_key").distinct().as[String].collect()
@@ -353,7 +353,7 @@ class AnnSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("hot cell: duplicate collapse + keyed sub-k-means bound every " +
       "pair-mining group under the cap") {
-    val (reps, forced, _) = Ann.refineCells(hotAssigned, 9900L, 16L)
+    val (reps, forced) = Ann.refineCells(hotAssigned, 9900L, 16L)
     val pops = reps.groupBy("pair_key").count().as[(String, Long)]
       .collect()
     assert(pops.forall(_._2 <= 16L),
@@ -373,6 +373,27 @@ class AnnSpec extends AnyFunSuite with LocalSparkSuite {
     val out2 = Ann.semDedup(emb, cents, 9900L, maxCellSize = 16L)
       .as[(Long, Long, Long)].collect().toSet
     assert(out1 == out2)
+  }
+
+  test("semDedup after a hot-cell split serves a second action on a " +
+      "derived frame once the first action's release has run") {
+    val cents = Seq((0L, Seq(1.0, 0.0))).toDF("cell_id", "cell_emb")
+    val emb = hotAssigned.select("vec_id", "embedding")
+    val r = Ann.semDedup(emb, cents, 9900L, maxCellSize = 16L)
+    val first = r.as[(Long, Long, Long)].collect().toSet
+    assert(first.size == 120)
+    // the release after the first action rides the listener bus: wait
+    // until it has dropped the assignment pin, then let it settle
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    val deadline = System.nanoTime() + 15e9.toLong
+    while (spark.sparkContext.getPersistentRDDs.size >= pinned &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    Thread.sleep(500)
+    // the split rounds' checkpoints are still read by `r`: a derived
+    // frame must plan and run against them
+    val kept = r.where(col("dropped") === 0).as[(Long, Long, Long)]
+      .collect().toSet
+    assert(kept == first.filter(_._3 == 0L))
   }
 
   test("hot cell of distinct-but-r4-indistinguishable vectors fails " +

@@ -102,6 +102,27 @@ class FixtureSchemaSpec extends AnyFunSuite with LocalSparkSuite {
     }
   }
 
+  test("documents.doc_id is non-null and unique in the sf0.001 and " +
+      "sf0.01 fixtures") {
+    // q_corpus_build's exact-dedup keeper keeps every row whose doc_id
+    // equals the min doc_id of its digest group: a duplicate or null
+    // doc_id would let two copies survive (Tables' contract)
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val r = graft.queries.Tables
+        .load(spark, SfDir.replace("sf0.001", sf), "documents")
+        .agg(count(lit(1)),
+          count(col("doc_id")), count_distinct(col("doc_id")))
+        .head()
+      val (rows, nonNull, distinct) = (r.getLong(0), r.getLong(1),
+        r.getLong(2))
+      assert(rows > 0, s"$sf/documents is empty")
+      assert(nonNull == rows, s"$sf/documents: ${rows - nonNull} null doc_id(s)")
+      assert(distinct == rows,
+        s"$sf/documents: ${rows - distinct} duplicate doc_id(s)")
+    }
+  }
+
   test("ScaleFixture round-trips events through the unit-agnostic " +
       "loader (mult=2 replica fixture loads with the same contract)") {
     // The sf0.3 scale verifies in SCALE.md depend on ScaleFixture

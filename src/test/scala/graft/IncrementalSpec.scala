@@ -76,7 +76,7 @@ class IncrementalSpec extends AnyFunSuite with LocalSparkSuite {
   test("the shingle cache is released after the decision materializes") {
     decisions(Seq(1L -> baseText), Seq(40L -> otherText))
     // the release listener fires asynchronously on the listener bus —
-    // same bounded wait as CacheHygieneSpec
+    // same bounded wait as MaterializeSpec
     val deadline = System.currentTimeMillis() + 10000
     while (spark.sparkContext.getPersistentRDDs.nonEmpty &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)

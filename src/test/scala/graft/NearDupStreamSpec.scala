@@ -205,4 +205,62 @@ class NearDupStreamSpec extends AnyFunSuite with LocalSparkSuite {
     //    (some survivor set, never empty: someone claims first)
     assert(emitN.nonEmpty && emitS.nonEmpty)
   }
+
+  // ---- intra-batch stamp selection (intended behaviour): among
+  // duplicate arrivals inside ONE micro-batch, the emitted envelope is
+  // the band-0 claimant's — the arrival whose band-0 row survived the
+  // band-claim dedup — not the earliest event time among the survivors.
+  // Only band-0 rows carry the envelope into the claim exchange
+  // (TypedOps.nearDupWithinWatermark), so this is the designed choice.
+
+  test("duplicate arrivals inside one micro-batch emit the band-0 " +
+      "claimant's envelope") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val ps = new PubSub(spark)
+    val t1 = ps.topic[String]("ndstamp-full")
+    val kept = TypedOps.nearDupWithinWatermark(
+      delay = "30 seconds").apply(t1.stream)
+    val emitted = mutable.Buffer.empty[EventEnvelope[String]]
+    val q1 = kept.writeStream.outputMode("append")
+      .foreachBatch { (b: Dataset[EventEnvelope[String]], _: Long) =>
+        emitted.synchronized { emitted ++= b.collect() }; ()
+      }.start()
+    // the band-claim stage alone, same input: which arrival claims band 0
+    val t2 = ps.topic[String]("ndstamp-bands")
+    val band0 = mutable.Buffer.empty[(String, Timestamp)]
+    val q2 = TypedOps.bandedProjection("30 seconds", 5, 64, 16, 42L)(
+        t2.stream.toDF())
+      .dropDuplicatesWithinWatermark("band", "h")
+      .where(col("band") === 0)
+      .writeStream.outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        band0.synchronized {
+          band0 ++= b.select(col("content"), col("stamp.start_time"))
+            .collect().map(r => (r.getString(0), r.getTimestamp(1)))
+        }; ()
+      }.start()
+    // three copies of docA in one micro-batch and one 1-second granule,
+    // the LATEST event time arriving first
+    val base = ts(0).getTime
+    val copies = Seq(700L, 200L, 450L).map(ms =>
+      EventEnvelope.at(new Timestamp(base + ms), docA))
+    val flush = Seq(EventEnvelope.at(ts(600), "flush marker document"))
+    for (batch <- Seq(copies, flush)) {
+      t1.publish(batch); t2.publish(batch)
+      q1.processAllAvailable(); q2.processAllAvailable()
+    }
+    q1.stop(); q2.stop(); ps.close()
+
+    val claimant = band0.filter(_._1 == docA)
+    assert(claimant.size == 1, s"band 0 admitted $claimant for docA")
+    val out = emitted.filter(_.content == docA)
+    assert(out.size == 1, s"expected one docA emission, got $out")
+    assert(out.head.stamp.start_time == claimant.head._2,
+      s"emitted stamp ${out.head.stamp.start_time} is not the band-0 " +
+        s"claimant's ${claimant.head._2}")
+    assert(out.head.stamp == copies.map(_.stamp)
+      .find(_.start_time == claimant.head._2).get,
+      "the emitted envelope must be one arrival's whole envelope")
+  }
 }

@@ -312,7 +312,7 @@ class PlanSpec extends AnyFunSuite with LocalSparkSuite {
     * of the scan-derived estimate (which ignores explode fan-out and
     * walks corpus-sized frames under the broadcast threshold; at
     * mult=300 the resulting corpus-sized broadcast build aborts at the
-    * 8 GiB hard limit — CacheHygiene.pinMaterialized). The observable
+    * 8 GiB hard limit — Materialize.pin, eager). The observable
     * contract at any SF: building the frame (NO action on it) leaves a
     * new fully-cached RDD behind.
     */

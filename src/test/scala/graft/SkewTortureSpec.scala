@@ -105,7 +105,7 @@ class SkewTortureSpec extends AnyFunSuite with LocalSparkSuite {
     // unsplit n^2/2
     val assigned = emb.withColumn("cell_id", lit(0L))
       .withColumn("aff", lit(0.5))
-    val (reps, _, _) = Ann.refineCells(assigned, 9500L, cap)
+    val (reps, _) = Ann.refineCells(assigned, 9500L, cap)
     val worst = reps.groupBy("pair_key").agg(count(lit(1)).as("c"))
       .agg(max(col("c"))).head().getLong(0)
     assert(worst <= cap, s"refined cell still holds $worst > $cap")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Materialize, Sessions}
+import graft.operators.NearDup
 
 /** Stage-level cost breakdown for q_corpus_build (guide §1.1/§7.1): times
   * each composed stage in isolation with the bench's own methodology
@@ -29,9 +30,8 @@ object CorpusBuildProfile {
         ((s: SparkSession, dir: String) =>
           graft.queries.SimilarityQueries.jaccardPairsForProfile(s, dir)),
       "components_over_pairs" -> ((s: SparkSession, dir: String) =>
-        graft.operators.Components.connectedComponents(
-          graft.queries.SimilarityQueries.jaccardPairsForProfile(s, dir)
-            .select(col("a"), col("b")))),
+        NearDup.components(
+          graft.queries.SimilarityQueries.jaccardPairsForProfile(s, dir))),
       "exact_keep_only" -> ((s: SparkSession, dir: String) => {
         import org.apache.spark.sql.expressions.Window
         graft.queries.Tables.load(s, dir, "documents")
@@ -55,15 +55,9 @@ object CorpusBuildProfile {
             .select(col("doc_id"), array_distinct(
               TextFunctions.wordShingles(col("text"), 5)).as("sh")),
           eager = true)
-        val ex0 = sets.select(col("doc_id"), explode(col("sh")).as("s0"))
-          .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-        val hot = ex0.groupBy("s").agg(count(lit(1)).as("df"))
-          .where(col("df") > 50).select("s")
-        val ex = ex0.join(broadcast(hot), Seq("s"), "left_anti")
-        val cands = ex.as("x").join(ex.as("y"),
-            col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-          .distinct()
+        val cands = NearDup.bucketPairs(
+          NearDup.capDocFreq(NearDup.shingleHashes(sets), 50), "doc_id",
+          Seq("s"), None)
         Materialize.releaseAfterFirstUse(cands, sets)
       }),
       // q_heavy_hitters stage split (VERDICT r19 item 8): the CMS grid

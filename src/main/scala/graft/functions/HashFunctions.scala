@@ -57,6 +57,8 @@ object HashFunctions {
     * band.
     */
   def lshBands(signature: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands > 0 && rowsPerBand > 0,
+      s"lshBands: bands=$bands and rowsPerBand=$rowsPerBand must be > 0")
     val entries = (0 until bands).map { b =>
       val elems = (1 to rowsPerBand).map(r =>
         element_at(signature, b * rowsPerBand + r))
@@ -82,6 +84,8 @@ object HashFunctions {
     * ingest-flood horizon. Returns array<struct<band:int, h:bigint>>.
     */
   def lshBands64(signature: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands > 0 && rowsPerBand > 0,
+      s"lshBands64: bands=$bands and rowsPerBand=$rowsPerBand must be > 0")
     val entries = (0 until bands).map { b =>
       val elems = (1 to rowsPerBand).map(r =>
         element_at(signature, b * rowsPerBand + r))

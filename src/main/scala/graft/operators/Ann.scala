@@ -204,7 +204,8 @@ object Ann {
             "band; add bands to hold recall); (2) for genuinely dense " +
             "near-identical clusters — which owe c²/2 output pairs by " +
             "this operator's CONTRACT and cannot be split away — use the " +
-            "keeper-form dedup (Ann.semDedup / q_dedup_keepers); " +
+            "keeper-form dedup (Ann.nearDupKeepersAuto, O(c) per " +
+            "cluster; Ann.semDedup / q_dedup_keepers); " +
             "(3) raise maxBucket to opt into the quadratic output " +
             "deliberately.")
       }
@@ -218,25 +219,12 @@ object Ann {
     // zip_with spelling would interpret a lambda per element on the
     // hottest row count in the engine): nBands compares per joined
     // row against the nBands×-smaller shuffle it buys.
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .where(graft.expressions.VectorExpressions.firstEqualIndex(
-        col("x.sigs"), col("y.sigs")) === col("x.band"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-      .distinct()
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    // Integer-quantized cut (r4q vs round(threshold*1e4)) — the exact
-    // cut the oracled twin queries use; score itself is score_q/10000,
-    // bit-identical to Det.r4(cosine) (see Det.r4q scaladoc).
-    val thresholdQ = math.round(threshold * 10000)
-    val result = cands
-      .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(vecs.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .select(col("a"), col("b"),
-        Det.r4q(VectorFunctions.cosine(col("ea"), col("eb"))).as("score_q"))
-      .where(col("score_q") >= thresholdQ)
-      .select(col("a"), col("b"), (col("score_q") / 10000).as("score"))
+    val cands = NearDup.bucketPairs(banded, "vec_id", Seq("band", "h"),
+      Some(graft.expressions.VectorExpressions.firstEqualIndex(
+        col("x.sigs"), col("y.sigs")) === col("x.band")))
+    // integer cut: round(threshold·1e4), the oracled twins' cut
+    val result = NearDup.verify(cands, emb, "vec_id", "embedding",
+      VectorFunctions.cosine, math.round(threshold * 10000), "score")
     // release the banded cache once the pair frame first materializes —
     // a long-lived session calling this repeatedly must not accumulate
     // executor storage (the cache exists only to share the projection
@@ -378,18 +366,26 @@ object Ann {
     */
   def nearDupPairsAuto(emb: DataFrame, dim: Int, threshold: Double,
       targetRecall: Double = 0.999, targetBucket: Long = 256L,
-      seed: Long = 42L, maxBucket: Long = DefaultMaxBucket): DataFrame = {
+      seed: Long = 42L, maxBucket: Long = DefaultMaxBucket): DataFrame =
+    nearDupPairsPlanned(emb, dim, threshold,
+      countedPlan("nearDupPairsAuto", emb, threshold, targetRecall,
+        targetBucket), seed, maxBucket)
+
+  /** [[lshPlan]] from `emb`'s own count, reported on stderr under
+    * `caller`. An empty corpus plans like n=1 (the oracle SQL's
+    * greatest(1.0, n/tb) path makes the two cases identical — same
+    * convention as q_lsh_plan) and degrades to zero output pairs
+    * instead of throwing on the lshPlan precondition.
+    */
+  private def countedPlan(caller: String, emb: DataFrame, threshold: Double,
+      targetRecall: Double, targetBucket: Long): LshPlan = {
     val n = emb.count()
-    // an empty corpus plans like n=1 (the oracle SQL's greatest(1.0,
-    // n/tb) path makes the two cases identical — same convention as
-    // q_lsh_plan) and degrades to zero output pairs instead of
-    // throwing on the lshPlan precondition
     val plan = lshPlan(math.max(1L, n), threshold, targetRecall,
       targetBucket)
-    System.err.println(s"[nearDupPairsAuto] n=$n -> bits=" +
+    System.err.println(s"[$caller] n=$n -> bits=" +
       s"${plan.bitsPerBand} bands=${plan.nBands} " +
       f"expectedRecall=${plan.expectedRecall}%.4f")
-    nearDupPairsPlanned(emb, dim, threshold, plan, seed, maxBucket)
+    plan
   }
 
   /** [[nearDupPairs]] under a caller-supplied [[LshPlan]] — the
@@ -423,18 +419,10 @@ object Ann {
     * join-back for verification. No hot-bucket guard is needed — a hot
     * bucket is exactly the case this operator is linear in.
     *
-    * Downstream contract: these edges are a CONNECTIVITY WITNESS for
-    * consumers that need duplicate components/keepers, not the full
-    * above-threshold pair set. Components over the star edges equal
-    * components over all verified bucket pairs whenever each bucket's
-    * above-threshold relation is a union of cliques containing the
-    * bucket min (true for duplicate clusters — mutually near-identical
-    * members); in adversarial geometry (x, y both below threshold vs the
-    * bucket min but above it vs each other) a star can miss a bridge the
-    * all-pairs graph would find, which is why [[nearDupPairs]] remains
-    * the oracle anchor at scales where its output fits (full cross-engine
-    * compare certified at mult=300) and NearDupSpec pins keeper-set
-    * equality of the two forms on the committed fixtures.
+    * Downstream contract (connectivity witness; refines, never
+    * over-merges): [[NearDup.starEdges]]. [[nearDupPairs]] remains the
+    * oracle anchor at scales where its output fits (full cross-engine
+    * compare certified at mult=300).
     */
   def nearDupStarEdges(emb: DataFrame, dim: Int, threshold: Double,
       plan: LshPlan, seed: Long = 42L): DataFrame = {
@@ -443,21 +431,9 @@ object Ann {
           col("embedding"), dim, plan.nBands, plan.bitsPerBand, seed))
           .as("bh"))
       .select(col("vec_id"), col("bh.band").as("band"), col("bh.h").as("h"))
-    val cand = banded
-      .withColumn("m",
-        min(col("vec_id")).over(Window.partitionBy(col("band"), col("h"))))
-      .where(col("vec_id") =!= col("m"))
-      .select(col("m").as("a"), col("vec_id").as("b"))
-      .distinct()
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val thresholdQ = math.round(threshold * 10000)
-    cand
-      .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(vecs.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .select(col("a"), col("b"),
-        Det.r4q(VectorFunctions.cosine(col("ea"), col("eb"))).as("score_q"))
-      .where(col("score_q") >= thresholdQ)
-      .select(col("a"), col("b"), (col("score_q") / 10000).as("score"))
+    NearDup.verify(NearDup.starEdges(banded, "vec_id", Seq("band", "h")),
+      emb, "vec_id", "embedding", VectorFunctions.cosine,
+      math.round(threshold * 10000), "score")
   }
 
   /** Keeper-direct embedding near-dup: auto-sized LSH ([[lshPlan]] from
@@ -477,15 +453,9 @@ object Ann {
   def nearDupKeepersAuto(emb: DataFrame, dim: Int, threshold: Double,
       targetRecall: Double = 0.999, targetBucket: Long = 256L,
       seed: Long = 42L): DataFrame = {
-    val n = emb.count()
-    val plan = lshPlan(math.max(1L, n), threshold, targetRecall,
-      targetBucket)
-    System.err.println(s"[nearDupKeepersAuto] n=$n -> bits=" +
-      s"${plan.bitsPerBand} bands=${plan.nBands} " +
-      f"expectedRecall=${plan.expectedRecall}%.4f")
-    Components.connectedComponents(
-      nearDupStarEdges(emb, dim, threshold, plan, seed)
-        .select(col("a"), col("b")))
+    val plan = countedPlan("nearDupKeepersAuto", emb, threshold,
+      targetRecall, targetBucket)
+    NearDup.components(nearDupStarEdges(emb, dim, threshold, plan, seed))
       .select(col("doc_id").as("vec_id"),
         col("component_id").as("keeper_id"))
   }

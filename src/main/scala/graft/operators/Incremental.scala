@@ -76,16 +76,11 @@ object Incremental {
       all.select(col("doc_id"), col("oe"),
         array_distinct(TextFunctions.wordShingles(col("text"), nGram)).as("sh")),
       eager = true)
-    // candidate probes join on 64-bit shingle hashes (8-byte shuffle
-    // keys, not 5-gram strings); false candidates from a collision are
-    // removed by the exact string-set verification below — the
-    // jaccardPairs contract (SimilarityQueries.scala), same rationale
-    val ex0 = sets
-      .select(col("doc_id"), col("oe"), explode(col("sh")).as("s0"))
-      .select(col("doc_id"), col("oe"), xxhash64(col("s0")).as("s"))
-    val hot = ex0.groupBy("s").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxDf).select("s")
-    val exploded = ex0.join(broadcast(hot), Seq("s"), "left_anti")
+    // candidate probes join on DF-capped 64-bit shingle hashes; false
+    // candidates from a collision are removed by the exact string-set
+    // verification below (NearDup.shingleHashes)
+    val exploded = NearDup.capDocFreq(NearDup.shingleHashes(sets, "oe"),
+      maxDf)
     // delta docs probe the index; a match counts if the other side is
     // existing, or an earlier (smaller-id) delta document
     val cands = exploded.where(!col("oe")).as("x")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Materialize
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
+import graft.operators.NearDup
 
 /** Deduplication and similarity-search queries — the training-data-pipeline
   * operators this engine adds beyond the reference's catalog.
@@ -89,33 +90,16 @@ object SimilarityQueries {
     // eager pin: the exploded-hash self-join below plans on the
     // shingle sets' measured size, not the explode-blind scan estimate
     val sets = Materialize.pin(shingleSets(s, dir), eager = true)
-    // Candidate generation runs on 64-BIT SHINGLE HASHES, not shingle
-    // strings: the DF count groups by hash and the self-join shuffles
-    // (doc_id, 8-byte key) rows instead of (doc_id, ~30-byte 5-gram) —
-    // at corpus scale the candidate join is the dominant shuffle and
-    // this cuts its key volume ~4x. Semantics: a hash collision could
-    // only (a) merge two shingles' DF counts at the cap (P ~ d²/2⁶⁴ per
-    // shingle pair) or (b) emit a false candidate — and false candidates
-    // are REMOVED by the exact verification below, which intersects the
-    // full STRING shingle sets. The emitted j is therefore still true
-    // string-set Jaccard; the DuckDB oracle (string DF cap, string
-    // candidates) hash-compares green at every measured SF, pinning the
-    // fixture collision-free.
-    val ex0 = sets.select(col("doc_id"), explode(col("sh")).as("s0"))
-      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-    // DF cap: anti-join against the (few) hot shingles — broadcast, so
-    // the cap itself never shuffles the exploded set a second time.
-    val hot = ex0.groupBy("s").agg(count(lit(1)).as("df"))
-      .where(col("df") > MaxShingleDf).select("s")
-    val ex = ex0.join(broadcast(hot), Seq("s"), "left_anti")
-    val cands = ex.as("x").join(ex.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
+    // candidates on DF-capped 64-bit shingle hashes (NearDup's
+    // shingleHashes / capDocFreq scaladocs: the collision argument)
+    val cands = NearDup.bucketPairs(
+      NearDup.capDocFreq(NearDup.shingleHashes(sets), MaxShingleDf),
+      "doc_id", Seq("s"), None)
     // Verification joins the FULL sets back — true Jaccard, the exact
-    // computation the MinHash-LSH path runs on its candidates. Sizes
-    // cast to long: DuckDB's len() is 64-bit and the driver hash
-    // compares representations, not just values.
+    // computation the MinHash-LSH path runs on its candidates — in its
+    // own form because this query emits the integer counts. Sizes cast
+    // to long: DuckDB's len() is 64-bit and the driver hash compares
+    // representations, not just values.
     val result = cands
       .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
       .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
@@ -163,20 +147,10 @@ object SimilarityQueries {
     * pre-distinct and c-1 verified edges, vs near-C(cap,2) verified
     * pairs per shared shingle in the capped all-pairs form.
     *
-    * Downstream contract (identical to the embedding star): these edges
-    * are a CONNECTIVITY WITNESS for keeper/component consumers, not the
-    * full above-threshold pair set. Components over star edges equal
-    * components over the verified all-pairs graph whenever each bucket's
-    * above-threshold relation is a union of cliques containing the
-    * bucket min (true for near-duplicate text clusters — mutually
-    * near-identical members share their shingle buckets and their bucket
-    * min); in adversarial geometry (b, c both below threshold vs the
-    * bucket min but above it vs each other) a star can miss a bridge the
-    * all-pairs graph finds — the star REFINES, never over-merges
-    * (verification is exact). JaccardStarSpec pins keeper-set equality
-    * of the two forms on the committed fixtures and the refinement
-    * caveat on a constructed chain; [[jaccardPairs]]-based
-    * q_dedup_keepers remains the oracle anchor where its output fits.
+    * Downstream contract (connectivity witness; refines, never
+    * over-merges): [[graft.operators.NearDup.starEdges]].
+    * [[jaccardPairs]]-based q_dedup_keepers remains the oracle anchor
+    * where its output fits.
     */
   private[graft] def jaccardStarEdges(s: SparkSession, dir: String,
       minJQ: Long): DataFrame =
@@ -189,22 +163,45 @@ object SimilarityQueries {
     */
   private[graft] def jaccardStarEdgesFrom(sets: DataFrame,
       minJQ: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ex = sets.select(col("doc_id"), explode(col("sh")).as("s0"))
-      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-    val cand = ex
-      .withColumn("m", min(col("doc_id")).over(Window.partitionBy(col("s"))))
-      .where(col("doc_id") =!= col("m"))
-      .select(col("m").as("a"), col("doc_id").as("b"))
-      .distinct()
-    val result = cand
-      .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
-      .withColumn("jq", Det.r4q(HashFunctions.jaccard(col("sha"), col("shb"))))
-      .where(col("jq") >= minJQ)
-      .select(col("a"), col("b"), (col("jq") / 10000).as("j"))
-    Materialize.releaseAfterFirstUse(result, sets)
+    val cand = NearDup.starEdges(NearDup.shingleHashes(sets), "doc_id",
+      Seq("s"))
+    Materialize.releaseAfterFirstUse(NearDup.verify(cand, sets, "doc_id",
+      "sh", HashFunctions.jaccard, minJQ, "j"), sets)
   }
+
+  /** DuckDB twin of [[shingleSets]] over `from`: the SELECT of
+    * (doc_id, carry..., sh), sh the distinct word-5-gram shingle list.
+    */
+  private def shingleSetsSql(from: String, carry: String*): String = {
+    val cols = ("doc_id" +: carry).mkString(", ")
+    s"""SELECT $cols, list_distinct(list_transform(
+        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
+        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
+      FROM (SELECT $cols, list_filter(regexp_split_to_array(text, '\\s+'),
+        t -> len(t) > 0) AS toks FROM $from)"""
+  }
+
+  /** The oracle's j column: r4 of the exact Jaccard from integer counts. */
+  private val JaccardJSql =
+    "floor(CAST(inter AS DOUBLE) / (na + nb - inter) * 10000 + 0.5)" +
+      " / 10000 AS j"
+
+  /** DuckDB twin of the Jaccard verify join-back: the `<p>scored` CTE
+    * (integer intersection and set sizes for every `<p>cand` pair over
+    * the `<p>docs` shingle sets), then the final SELECT of `cols`, cut
+    * at the INTEGER-quantized jaccard >= minJQ — the Spark side's jq
+    * cut, integers on both engines, no double comparison.
+    */
+  private def jaccardVerifySql(p: String, cols: String, minJQ: Long)
+      : String =
+    s"""${p}scored AS (
+      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
+        len(da.sh) AS na, len(db.sh) AS nb
+      FROM ${p}cand
+      JOIN ${p}docs da ON a = da.doc_id
+      JOIN ${p}docs db ON b = db.doc_id)
+    SELECT $cols FROM ${p}scored
+    WHERE ${Det.sqlR4q("CAST(inter AS DOUBLE) / (na + nb - inter)")} >= $minJQ"""
 
   /** DuckDB twin of [[jaccardStarEdges]]: string shingles (the fixture
     * is pinned hash-collision-free by every green jaccard compare, so
@@ -212,36 +209,18 @@ object SimilarityQueries {
     * verify at the same integer cut. Yields (a, b) pairs.
     */
   private def jaccardStarOracle(minJQ: Long): String =
-    s"""WITH sdocs AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-      FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'),
-        t -> len(t) > 0) AS toks FROM documents)),
+    s"""WITH sdocs AS (${shingleSetsSql("documents")}),
     sstar AS (
       SELECT min(doc_id) OVER (PARTITION BY s) AS a, doc_id AS b
       FROM (SELECT doc_id, unnest(sh) AS s FROM sdocs)),
     scand AS (SELECT DISTINCT a, b FROM sstar WHERE a <> b),
-    sscored AS (
-      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
-        len(da.sh) AS na, len(db.sh) AS nb
-      FROM scand
-      JOIN sdocs da ON a = da.doc_id
-      JOIN sdocs db ON b = db.doc_id)
-    SELECT a, b FROM sscored
-    WHERE ${Det.sqlR4q("CAST(inter AS DOUBLE) / (na + nb - inter)")} >= $minJQ"""
+    ${jaccardVerifySql("s", "a, b", minJQ)}"""
 
-  /** minJQ is the INTEGER threshold (minJ * 10000): the WHERE below
-    * compares the BIGINT-quantized jaccard, mirroring the Spark side's
-    * jq cut — integers on both engines, no double comparison.
+  /** DuckDB twin of q_ngram_jaccard's pairs at the integer cut minJQ
+    * (minJ * 10000).
     */
   private def jaccardOracle(minJQ: Long): String =
-    s"""WITH docs AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-      FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'),
-        t -> len(t) > 0) AS toks FROM documents)),
+    s"""WITH docs AS (${shingleSetsSql("documents")}),
     sh0 AS (SELECT doc_id, unnest(sh) AS s FROM docs),
     sh AS (
       SELECT doc_id, s FROM (
@@ -250,16 +229,42 @@ object SimilarityQueries {
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id),
-    scored AS (
-      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
-        len(da.sh) AS na, len(db.sh) AS nb
-      FROM cand
-      JOIN docs da ON a = da.doc_id
-      JOIN docs db ON b = db.doc_id)
-    SELECT a, b, inter, na, nb,
-      floor(CAST(inter AS DOUBLE) / (na + nb - inter) * 10000 + 0.5) / 10000 AS j
-    FROM scored
-    WHERE ${Det.sqlR4q("CAST(inter AS DOUBLE) / (na + nb - inter)")} >= $minJQ"""
+    ${jaccardVerifySql("", s"a, b, inter, na, nb, $JaccardJSql", minJQ)}"""
+
+  /** Integer value of 12 hex digits of md5(s) starting at 1-based
+    * `start`: 48 bits, exact in BIGINT (and in the double power()).
+    */
+  private def hexnum(start: Int): String =
+    s"""CAST(list_sum(list_transform(generate_series(0, 11),
+       j -> CAST(instr('0123456789abcdef',
+              substr(md5(s), $start + j, 1)) - 1 AS BIGINT)
+            * CAST(power(16, 11 - j) AS BIGINT))) AS BIGINT)"""
+
+  /** DuckDB twin of [[graft.operators.NearDup.components]] over the
+    * (a, b) pair CTE `pairs`: the symmetrized `edges` CTE and the
+    * recursive min-reachable-label closure `reach` over (<id>, lab). The
+    * caller opens WITH RECURSIVE.
+    */
+  private def reachSql(pairs: String, id: String): String =
+    s"""edges AS (SELECT a, b FROM $pairs
+          UNION SELECT b AS a, a AS b FROM $pairs),
+        reach($id, lab) AS (
+          SELECT a, a FROM edges
+          UNION
+          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.$id)"""
+
+  /** Each vertex's component label over [[reachSql]]'s closure. */
+  private def componentOfSql(id: String, label: String): String =
+    s"SELECT $id, min(lab) AS $label FROM reach GROUP BY $id"
+
+  /** DuckDB twin of [[graft.operators.NearDup.keepers]]: the documents
+    * minus every non-representative of a component of `pairs`.
+    */
+  private def keepersSql(pairs: String): String =
+    s"""${reachSql(pairs, "doc_id")},
+        comp AS (${componentOfSql("doc_id", "component_id")})
+        SELECT doc_id FROM documents WHERE doc_id NOT IN (
+          SELECT doc_id FROM comp WHERE doc_id <> component_id)"""
 
   /** MinHash-LSH near-dup pairs at a configurable banding (nPerms total
     * hashes over nBands bands of nPerms/nBands rows), candidates
@@ -270,7 +275,8 @@ object SimilarityQueries {
     */
   private[graft] def minhashLshPairs(s: SparkSession, dir: String,
       nPerms: Int, nBands: Int): DataFrame = {
-    require(nPerms % nBands == 0, s"nPerms=$nPerms not divisible by $nBands")
+    require(nBands > 0 && nPerms % nBands == 0,
+      s"nPerms=$nPerms must be a positive multiple of nBands=$nBands")
     val sets = Materialize.pin(shingleSets(s, dir), eager = false)
     // Materialize the BANDED projection (not the signature): one
     // cached stage covers both self-join sides, which would
@@ -289,17 +295,9 @@ object SimilarityQueries {
         explode(HashFunctions.lshBands(col("sig"), nBands, nPerms / nBands))
           .as("bh"))
         .select(col("doc_id"), col("bh.band"), col("bh.h")), eager = true)
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val result = cands
-      .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
-      .withColumn("jq", Det.r4q(HashFunctions.jaccard(col("sha"), col("shb"))))
-      .where(col("jq") >= JaccardThresholdQ)
-      .select(col("a"), col("b"), (col("jq") / 10000).as("j"))
+    val result = NearDup.verify(
+      NearDup.bucketPairs(banded, "doc_id", Seq("band", "h"), None), sets,
+      "doc_id", "sh", HashFunctions.jaccard, JaccardThresholdQ, "j")
     // both pinned stages release on the first action — repeated
     // library use must not accumulate executor storage
     Materialize.releaseAfterFirstUse(result, banded, sets)
@@ -343,24 +341,12 @@ object SimilarityQueries {
     val r = nPerms / nBands
     val p = graft.expressions.MinHashSignature.P
     val m = HashFunctions.BandHashMult
-    // integer value of 12 hex digits of md5(s) starting at 1-based
-    // `start` — 48 bits, exact in BIGINT (and in the double power())
-    def hexnum(start: Int): String =
-      s"""CAST(list_sum(list_transform(generate_series(0, 11),
-         j -> CAST(instr('0123456789abcdef',
-                substr(md5(s), $start + j, 1)) - 1 AS BIGINT)
-              * CAST(power(16, 11 - j) AS BIGINT))) AS BIGINT)"""
     val vdefs = (0 until r)
       .map(j => s"max(CASE WHEN i % $r = $j THEN v END) AS v$j")
       .mkString(", ")
     val fold = (1 until r)
       .foldLeft("v0")((acc, i) => s"(($acc) * $m + v$i) % $p")
-    s"""WITH docs AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-      FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'),
-        t -> len(t) > 0) AS toks FROM documents)),
+    s"""WITH docs AS (${shingleSetsSql("documents")}),
     shu AS (SELECT doc_id, unnest(sh) AS s FROM docs),
     hs AS (
       SELECT doc_id,
@@ -379,16 +365,7 @@ object SimilarityQueries {
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bnd x JOIN bnd y
         ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-    scored AS (
-      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
-        len(da.sh) AS na, len(db.sh) AS nb
-      FROM cand
-      JOIN docs da ON a = da.doc_id
-      JOIN docs db ON b = db.doc_id)
-    SELECT a, b,
-      floor(CAST(inter AS DOUBLE) / (na + nb - inter) * 10000 + 0.5) / 10000 AS j
-    FROM scored
-    WHERE ${Det.sqlR4q("CAST(inter AS DOUBLE) / (na + nb - inter)")} >= $JaccardThresholdQ"""
+    ${jaccardVerifySql("", s"a, b, $JaccardJSql", JaccardThresholdQ)}"""
   }
 
   /** [[minhashLshOracle]] with the banding SIZED FROM DUCKDB'S OWN
@@ -414,17 +391,7 @@ object SimilarityQueries {
   private def minhashLshAutoOracle(seed: Long): String = {
     val p = graft.expressions.MinHashSignature.P
     val m = HashFunctions.BandHashMult
-    def hexnum(start: Int): String =
-      s"""CAST(list_sum(list_transform(generate_series(0, 11),
-         j -> CAST(instr('0123456789abcdef',
-                substr(md5(s), $start + j, 1)) - 1 AS BIGINT)
-              * CAST(power(16, 11 - j) AS BIGINT))) AS BIGINT)"""
-    s"""WITH docs AS MATERIALIZED (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-      FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'),
-        t -> len(t) > 0) AS toks FROM documents)),
+    s"""WITH docs AS MATERIALIZED (${shingleSetsSql("documents")}),
     nn AS (SELECT count(*) AS n FROM documents),
     -- bandsFor(k) at t = $JaccardThreshold, recall target 0.999
     sized AS (
@@ -474,16 +441,7 @@ object SimilarityQueries {
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bnd x JOIN bnd y
         ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-    scored AS (
-      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
-        len(da.sh) AS na, len(db.sh) AS nb
-      FROM cand
-      JOIN docs da ON a = da.doc_id
-      JOIN docs db ON b = db.doc_id)
-    SELECT a, b,
-      floor(CAST(inter AS DOUBLE) / (na + nb - inter) * 10000 + 0.5) / 10000 AS j
-    FROM scored
-    WHERE ${Det.sqlR4q("CAST(inter AS DOUBLE) / (na + nb - inter)")} >= $JaccardThresholdQ"""
+    ${jaccardVerifySql("", s"a, b, $JaccardJSql", JaccardThresholdQ)}"""
   }
 
   /** DuckDB twin of the FULL SimHash pipeline: per-token 64-bit hash
@@ -781,16 +739,11 @@ object SimilarityQueries {
     // join + one min-agg, O(cluster diameter) rounds; oracle is a
     // recursive CTE computing the same min-reachable-id fixpoint.
     "q_neardup_components" -> QueryDef(
-      (s, dir) => graft.operators.Components.connectedComponents(
-        jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ)
-          .select(col("a"), col("b"))),
+      (s, dir) => NearDup.components(
+        jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ)),
       Some(s"""WITH RECURSIVE pairs AS (${jaccardOracle(JaccardThresholdQ)}),
-        edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT a, a FROM edges
-          UNION
-          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.doc_id)
-        SELECT doc_id, min(lab) AS component_id FROM reach GROUP BY doc_id"""),
+        ${reachSql("pairs", "doc_id")}
+        ${componentOfSql("doc_id", "component_id")}"""),
       // headliner since round 13 (full-catalog-radar top residual)
       bench = true),
 
@@ -799,25 +752,11 @@ object SimilarityQueries {
     // cluster but is not its min-id representative. This is the query a
     // training-data pipeline actually materializes.
     "q_dedup_keepers" -> QueryDef(
-      (s, dir) => {
-        val drop = graft.operators.Components.connectedComponents(
-          jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ)
-            .select(col("a"), col("b")))
-          .where(col("doc_id") =!= col("component_id"))
-        Tables.load(s, dir, "documents")
-          .join(drop, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"))
-      },
+      (s, dir) => NearDup.keepers(Tables.load(s, dir, "documents"),
+          jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ))
+        .select(col("doc_id")),
       Some(s"""WITH RECURSIVE pairs AS (${jaccardOracle(JaccardThresholdQ)}),
-        edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT a, a FROM edges
-          UNION
-          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.doc_id),
-        comp AS (
-          SELECT doc_id, min(lab) AS component_id FROM reach GROUP BY doc_id)
-        SELECT doc_id FROM documents WHERE doc_id NOT IN (
-          SELECT doc_id FROM comp WHERE doc_id <> component_id)""")),
+        ${keepersSql("pairs")}""")),
 
     // The keeper artifact via STAR consolidation — q_dedup_keepers'
     // scale-safe form (the text twin of q_embed_keepers_auto): O(c)
@@ -831,27 +770,12 @@ object SimilarityQueries {
     // (window min per string-shingle bucket, exact verify, component
     // fixpoint) — a full independent twin, not a rows-only check.
     "q_dedup_keepers_star" -> QueryDef(
-      (s, dir) => {
-        val drop = graft.operators.Components.connectedComponents(
-          jaccardStarEdges(s, dir, JaccardThresholdQ)
-            .select(col("a"), col("b")))
-          .where(col("doc_id") =!= col("component_id"))
-        Tables.load(s, dir, "documents")
-          .join(drop, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"))
-      },
+      (s, dir) => NearDup.keepers(Tables.load(s, dir, "documents"),
+          jaccardStarEdges(s, dir, JaccardThresholdQ))
+        .select(col("doc_id")),
       Some(s"""WITH RECURSIVE spairs AS (
           ${jaccardStarOracle(JaccardThresholdQ)}),
-        edges AS (SELECT a, b FROM spairs
-          UNION SELECT b AS a, a AS b FROM spairs),
-        reach(doc_id, lab) AS (
-          SELECT a, a FROM edges
-          UNION
-          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.doc_id),
-        comp AS (
-          SELECT doc_id, min(lab) AS component_id FROM reach GROUP BY doc_id)
-        SELECT doc_id FROM documents WHERE doc_id NOT IN (
-          SELECT doc_id FROM comp WHERE doc_id <> component_id)""")),
+        ${keepersSql("spairs")}""")),
 
     // END-TO-END corpus build — the whole pretraining materialization as
     // ONE verified plan: exact dedup (md5 keeper; also catches docs too
@@ -893,10 +817,8 @@ object SimilarityQueries {
           .withColumn("mn", min("doc_id").over(Window.partitionBy("h")))
           .where(col("doc_id") =!= col("mn"))
           .select("doc_id")
-        val drop = graft.operators.Components.connectedComponents(
-          jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ)
-            .select(col("a"), col("b")))
-          .where(col("doc_id") =!= col("component_id"))
+        val drop = NearDup.dropped(
+          jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ))
         // one anti join against the UNION of the two small drop sets
         // (exact dups + component non-reps) instead of two chained anti
         // joins: anti(anti(D, A), B) = anti(D, A ∪ B), and the union
@@ -924,14 +846,9 @@ object SimilarityQueries {
           "it", "that", "for", "on", "with", "as", "was", "at", "by", "be",
           "this").map(w => s"'$w'").mkString("[", ", ", "]")
         s"""WITH RECURSIVE pairs AS (${jaccardOracle(JaccardThresholdQ)}),
-        edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT a, a FROM edges
-          UNION
-          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.doc_id),
+        ${reachSql("pairs", "doc_id")},
         dropids AS (
-          SELECT doc_id FROM (
-            SELECT doc_id, min(lab) AS component_id FROM reach GROUP BY doc_id)
+          SELECT doc_id FROM (${componentOfSql("doc_id", "component_id")})
           WHERE doc_id <> component_id),
         exact AS (
           SELECT doc_id, text FROM (
@@ -1000,12 +917,7 @@ object SimilarityQueries {
           WHERE doc_id <> mn),
         allx AS (SELECT doc_id, TRUE AS oe, text FROM ex
           UNION ALL SELECT doc_id, FALSE AS oe, text FROM dl),
-        docs2 AS (SELECT doc_id, oe, list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-            i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-          FROM (SELECT doc_id, oe, list_filter(
-            regexp_split_to_array(text, '\\s+'), t -> len(t) > 0) AS toks
-            FROM allx)),
+        docs2 AS (${shingleSetsSql("allx", "oe")}),
         sh0 AS (SELECT doc_id, oe, unnest(sh) AS s FROM docs2),
         shf AS (SELECT doc_id, oe, s FROM (
             SELECT doc_id, oe, s, count(*) OVER (PARTITION BY s) AS df
@@ -1685,13 +1597,8 @@ object SimilarityQueries {
             JOIN aug ex ON ex.vec_id = c.a
             JOIN aug ey ON ey.vec_id = c.b) t
           WHERE score_q >= $NearDupAutoThresholdQ),
-        edges AS (SELECT a, b FROM pairs
-          UNION SELECT b AS a, a AS b FROM pairs),
-        reach(vec_id, lab) AS (
-          SELECT a, a FROM edges
-          UNION
-          SELECT e.a, r.lab FROM edges e JOIN reach r ON e.b = r.vec_id)
-        SELECT vec_id, min(lab) AS keeper_id FROM reach GROUP BY vec_id"""),
+        ${reachSql("pairs", "vec_id")}
+        ${componentOfSql("vec_id", "keeper_id")}"""),
       bench = true),
 
     // Exact-cosine pair mining over a deterministic FIXED-COUNT cohort

@@ -230,7 +230,8 @@ object TypedOps {
       nPerms: Int, nBands: Int, seed: Long)(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    require(nPerms % nBands == 0, s"nPerms=$nPerms not divisible by $nBands")
+    require(nBands > 0 && nPerms % nBands == 0,
+      s"nPerms=$nPerms must be a positive multiple of nBands=$nBands")
     df
       .withColumn("event_time", col("stamp.start_time"))
       .withWatermark("event_time", delay)

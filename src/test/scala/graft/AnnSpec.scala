@@ -107,6 +107,7 @@ class AnnSpec extends AnyFunSuite with LocalSparkSuite {
         .collect()
     }
     assert(e.getMessage.contains("maxBucket=16") &&
+      e.getMessage.contains("nearDupKeepersAuto") &&
       e.getMessage.contains("semDedup") &&
       e.getMessage.contains("bitsPerBand"),
       s"guard message missing diagnosis/remedies: ${e.getMessage}")

@@ -208,4 +208,27 @@ class BatchOpsSpec extends AnyFunSuite with LocalSparkSuite {
       "band hashes all fit in 31 bits — the streaming gate lost its " +
         "64-bit collision bound")
   }
+
+  // bands = 0 used to return an empty band array (every document
+  // silently yields no candidates); rowsPerBand = 0 died in reduceLeft
+  // (lshBands) or hashed only the band index, so every document
+  // collided in every band (lshBands64)
+  test("lshBands rejects zero bands or rows per band, naming the values") {
+    for ((b, r) <- Seq((0, 4), (4, 0))) {
+      val e = intercept[IllegalArgumentException](
+        HashFunctions.lshBands(col("sig"), b, r))
+      assert(e.getMessage.contains(s"bands=$b") &&
+        e.getMessage.contains(s"rowsPerBand=$r"), e.getMessage)
+    }
+  }
+
+  test("lshBands64 rejects zero bands or rows per band, naming the " +
+      "values") {
+    for ((b, r) <- Seq((0, 4), (4, 0))) {
+      val e = intercept[IllegalArgumentException](
+        HashFunctions.lshBands64(col("sig"), b, r))
+      assert(e.getMessage.contains(s"bands=$b") &&
+        e.getMessage.contains(s"rowsPerBand=$r"), e.getMessage)
+    }
+  }
 }

@@ -59,4 +59,12 @@ class LshRecallSpec extends AnyFunSuite with LocalSparkSuite {
     // threshold without weakening the evidence that 32/8 is usable
     assert(recall >= 0.9, f"32/8 recall $recall%.3f below floor")
   }
+
+  test("minhashLshPairs rejects nBands = 0 by naming the values, not " +
+      "with a division by zero") {
+    val e = intercept[IllegalArgumentException](
+      graft.queries.SimilarityQueries.minhashLshPairs(spark, SfDir, 64, 0))
+    assert(e.getMessage.contains("nPerms=64") &&
+      e.getMessage.contains("nBands=0"), e.getMessage)
+  }
 }

@@ -263,4 +263,13 @@ class NearDupStreamSpec extends AnyFunSuite with LocalSparkSuite {
       .find(_.start_time == claimant.head._2).get,
       "the emitted envelope must be one arrival's whole envelope")
   }
+
+  test("bandedProjection rejects nBands = 0 by naming the values, not " +
+      "with a division by zero") {
+    val e = intercept[IllegalArgumentException](
+      TypedOps.bandedProjection("1 minute", 5, 64, 0, 42L)(
+        spark.emptyDataFrame))
+    assert(e.getMessage.contains("nPerms=64") &&
+      e.getMessage.contains("nBands=0"), e.getMessage)
+  }
 }

@@ -10,9 +10,10 @@ RSS solo for q_corpus_build). This checker re-derives the SAME
 semantics with a linear toolchain, running the expensive pair pass
 ONCE for the whole family:
 
- - DuckDB runs the ledger `pairs` CTE TEXT VERBATIM (4-gram shingles,
-   df<=50 candidate cap, exact-Jaccard >= 0.8 verify) — the machinery
-   q_ngram_jaccard's own compare certifies — returning the edge list;
+ - DuckDB runs q_ngram_jaccard's ledger oracle, read from the
+   oracle_sql.json that graft.Verify writes to <outDir> (word 5-gram
+   shingles, df<=50 candidate cap, exact-Jaccard >= 0.8 verify) — the
+   `pairs` CTE of all three ledger oracles — returning the edge list;
  - connected components run in PYTHON via union-find with
    union-by-min-id (root IS the min-label the recursive CTE computes),
    O(E alpha), an independent implementation of the consolidation;
@@ -25,8 +26,9 @@ ONCE for the whole family:
    EXCEPT ALL in both directions — exact, dtype-strict — and a
    wrap-format report JSON is written per query for the assembler.
 
-Mirrors queries/SimilarityQueries.scala (keep the pairs CTE and each
-tail verbatim in sync with the ledger oracle_sql entries).
+Mirrors queries/SimilarityQueries.scala (keep each tail verbatim in
+sync with the ledger oracle_sql entries; the pairs SQL is the ledger's
+own).
 
 The pairs table IS q_ngram_jaccard's declared output, so the same pass
 also certifies that query (its compare here is the ledger SQL itself
@@ -73,36 +75,10 @@ docs = f"{sfdir}/documents.parquet"
 pat = f"{docs}/*.parquet" if os.path.isdir(docs) else docs
 con.sql(f"CREATE VIEW documents AS SELECT * FROM '{pat}'")
 
-# --- the shared pairs CTE, verbatim (q_ngram_jaccard's full output) ---
+# --- the shared pairs CTE: q_ngram_jaccard's ledger oracle itself ---
+pairs_sql = json.load(open(f"{outdir}/oracle_sql.json"))["q_ngram_jaccard"]
 t0 = time.time()
-con.sql(r"""
-  CREATE TABLE pairs_full AS
-  WITH docs AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - 4, 0)),
-        i -> list_aggregate(toks[i:i+4], 'string_agg', ' '))) AS sh
-      FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-        t -> len(t) > 0) AS toks FROM documents)),
-    sh0 AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-    sh AS (
-      SELECT doc_id, s FROM (
-        SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh0)
-      WHERE df <= 50),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id),
-    scored AS (
-      SELECT a, b, len(list_intersect(da.sh, db.sh)) AS inter,
-        len(da.sh) AS na, len(db.sh) AS nb
-      FROM cand
-      JOIN docs da ON a = da.doc_id
-      JOIN docs db ON b = db.doc_id)
-    SELECT a, b, inter, na, nb,
-      floor(CAST(inter AS DOUBLE) / (na + nb - inter) * 10000 + 0.5)
-        / 10000 AS j
-    FROM scored
-    WHERE CAST(floor((CAST(inter AS DOUBLE) / (na + nb - inter)) * 10000
-      + 0.5) AS BIGINT) >= 8000""")
+con.sql(f"CREATE TABLE pairs_full AS {pairs_sql}")
 edges = con.sql("SELECT a, b FROM pairs_full").fetchall()
 print(f"[textdedup] {len(edges)} verified edges "
       f"in {time.time() - t0:.1f}s", flush=True)

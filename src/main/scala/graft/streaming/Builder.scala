@@ -84,7 +84,7 @@ object QueryBuilder {
 
 /** A built continuous query: subscribe sinks, run, close (reference:
   * TypedContinuousQuery, continuous_query.go:34-161). Subscriptions
-  * attach foreachBatch sinks; Run starts them; Close stops them. The
+  * attach PubSub subscriber sinks; Run starts them; Close stops them. The
   * global registry mirrors the reference's QueryRepository
   * (query_repository.go:65-78).
   */

@@ -181,12 +181,15 @@ private object Topic {
   val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
-/** A running subscription: a foreachBatch sink pumping windows/events into
-  * a callback (reference: subscriber callbacks,
-  * pkg/pubsub/subscriber.go:122-196).
+/** A running subscription: a streaming query whose [[CallbackSink]]
+  * hands each micro-batch's events or windows to a callback (reference:
+  * subscriber callbacks, pkg/pubsub/subscriber.go:122-196). `sinkId`
+  * keys the callback in the sink's registry; close removes it on every
+  * path.
   */
-final class Subscription[T](
+final class Subscription[T] private[streaming] (
     private[streaming] val query: StreamingQuery,
+    private[streaming] val sinkId: String,
     detach: () => Unit = () => (),
     private[streaming] val ownerTopic: Option[Topic[_]] = None) {
 
@@ -223,6 +226,9 @@ final class Subscription[T](
     // pinned in the registry forever
     try query.stop()
     finally {
+      // the query has stopped (or died): its callback is unreachable, and
+      // the registry entry goes whether or not the sources are released
+      CallbackSink.release(sinkId)
       // synchronized: concurrent closes must not double-detach (each
       // detach decrements the owning topic's attachment count once)
       val doDetach = synchronized {
@@ -370,9 +376,15 @@ final class PubSub(val spark: SparkSession) {
   }
 
   /** Subscribe a per-batch callback to a dataset (usually a topic stream
-    * or an operator chain over one). Delivery is micro-batched; within a
-    * batch, events are sorted by event time — the observable behavior of
-    * the reference's sorted stream (stream.go:279-319).
+    * or an operator chain over one). Delivery is micro-batched: each
+    * non-empty micro-batch reaches `cb` once, on the query's stream
+    * thread, sorted by event time with ties in input order — the
+    * observable behavior of the reference's sorted stream
+    * (stream.go:279-319). A throwing callback is recovered
+    * (`PubSub.guarded`). The batch's rows travel to the driver inside
+    * the write job's commit messages ([[CallbackSink]]), decoded by a
+    * deserializer bound once here, so a batch costs the driver one
+    * planned job and no second query.
     */
   def subscribe[T](ds: Dataset[EventEnvelope[T]],
       checkpointName: Option[String] = None,
@@ -384,23 +396,29 @@ final class PubSub(val spark: SparkSession) {
       // and release their consumer on close (the dead-consumer fix).
       releaseOnClose: Boolean = true)(
       cb: Seq[EventEnvelope[T]] => Unit): Subscription[T] = synchronized {
-    var w = ds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[EventEnvelope[T]], _: Long) =>
-        val rows = batch.collect().sortBy(_.stamp.start_time.getTime)
-        if (rows.nonEmpty) PubSub.guarded(cb(rows.toSeq))
-      }
     // A stable checkpoint name lets a restarted subscription resume from
     // its committed offset — the reference's migrate-without-loss
     // guarantee (pub_sub_test.go:136-166).
-    checkpointName.foreach { n =>
+    val checkpoint = checkpointName.flatMap(n =>
       spark.conf.getOption("spark.sql.streaming.checkpointLocation")
-        .foreach(base => w = w.option("checkpointLocation", s"$base/$n"))
-    }
+        .map(base => s"$base/$n"))
     val release =
       if (releaseOnClose) consumerReleaseHook(Seq(ds)) else () => ()
-    val q = w.start()
-    val s = register(attachSub(q, owner))
+    startSink(ds, checkpoint, owner, release) { rows =>
+      val sorted = rows.sortBy(_.stamp.start_time.getTime)
+      if (sorted.nonEmpty) PubSub.guarded(cb(sorted))
+    }
+  }
+
+  /** Start `ds` into a [[CallbackSink]] and register the subscription;
+    * its close stops the query, then releases the sink and `release`s
+    * the input consumers.
+    */
+  private def startSink[T, A](ds: Dataset[A], checkpoint: Option[String],
+      owner: Option[Topic[T]], release: () => Unit)(
+      deliver: Seq[A] => Unit): Subscription[T] = {
+    val (q, sinkId) = CallbackSink.start(ds, checkpoint)(deliver)
+    val s = register(attachSub(q, sinkId, owner))
     s.releaseSources = release
     s
   }
@@ -411,12 +429,12 @@ final class PubSub(val spark: SparkSession) {
     * a Subscription over an arbitrary operator chain has no owner and
     * never triggers cleanup).
     */
-  private def attachSub[T](q: StreamingQuery,
+  private def attachSub[T](q: StreamingQuery, sinkId: String,
       owner: Option[Topic[T]]): Subscription[T] = owner match {
     case Some(t) =>
       attached(t) += 1
-      new Subscription[T](q, () => detach(t), Some(t))
-    case None => new Subscription[T](q)
+      new Subscription[T](q, sinkId, () => detach(t), Some(t))
+    case None => new Subscription[T](q, sinkId)
   }
 
   /** Register a subscription in the live list and arm its close-time
@@ -522,18 +540,9 @@ final class PubSub(val spark: SparkSession) {
     */
   private def startWindowSink[T](windows: Dataset[WindowBatch[T]],
       owner: Option[Topic[T]], inputs: Seq[Dataset[_]])(
-      cb: WindowBatch[T] => Unit): Subscription[T] = {
-    val q = windows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[WindowBatch[T]], _: Long) =>
-        batch.collect().sortBy(_.windowId)
-          .foreach(w => PubSub.guarded(cb(w))); ()
-      }
-      .start()
-    val s = register(attachSub(q, owner))
-    s.releaseSources = consumerReleaseHook(inputs)
-    s
-  }
+      cb: WindowBatch[T] => Unit): Subscription[T] =
+    startSink(windows, None, owner, consumerReleaseHook(inputs))(
+      _.sortBy(_.windowId).foreach(w => PubSub.guarded(cb(w))))
 
   /** Hot-migrate a LIVE topic to a new configuration (reference:
     * migrateStream via AddOrReplaceStream on an existing id,

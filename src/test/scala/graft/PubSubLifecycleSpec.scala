@@ -132,6 +132,63 @@ class PubSubLifecycleSpec extends AnyFunSuite with LocalSparkSuite {
     ps.close()
   }
 
+  test("closing a subscription removes its callback from the sink " +
+      "registry on every path") {
+    val ps = new PubSub(spark)
+    val t = ps.createTopic[Int]("sink-release")
+    val before = SinkProbe.registered
+    val s1 = ps.subscribe(t.stream) { _ => () }
+    assert(SinkProbe.registered == before + 1)
+    s1.close()
+    assert(SinkProbe.registered == before)
+
+    val s2 = ps.subscribeBatch(t.stream, CountingWindowPolicy(2, 2)) { _ => () }
+    t.publishValues(1, 2)
+    s2.drain()
+    s2.close()
+    assert(SinkProbe.registered == before)
+
+    // restart closes with releaseOnClose = false, then subscribes again
+    val cq = QueryBuilder[Int](ps).from("sink-release")
+      .connectTo(TypedOps.filter[Int](_ => true)).build()
+      .subscribe(_ => ()).run()
+    cq.restart()
+    assert(SinkProbe.registered == before + 1)
+    cq.close()
+    assert(SinkProbe.registered == before)
+
+    // a query that died on a poison event
+    import spark.implicits._
+    val poisoned = t.stream.map { e =>
+      if (e.content == 13) throw new RuntimeException("poison event")
+      e
+    }
+    val s3 = ps.subscribe(poisoned) { _ => () }
+    t.publishValues(13)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      s3.drain())
+    s3.close()
+    assert(SinkProbe.registered == before)
+
+    // a query whose stop() throws: its callback ignores the interrupt
+    // past the stop timeout (read from the session when stop() runs)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var hold = true
+    val s4 = ps.subscribe(t.stream) { _ =>
+      entered.countDown()
+      while (hold) Thread.onSpinWait()
+    }
+    assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    spark.conf.set("spark.sql.streaming.stopTimeout", "200ms")
+    try intercept[java.util.concurrent.TimeoutException](s4.close())
+    finally {
+      hold = false
+      spark.conf.unset("spark.sql.streaming.stopTimeout")
+    }
+    assert(SinkProbe.registered == before)
+    ps.close()
+  }
+
   test("ownerless subscription over an operator chain never cleans up") {
     val ps = new PubSub(spark)
     val t = ps.topic[Int]("chain")

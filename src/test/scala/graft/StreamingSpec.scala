@@ -75,6 +75,34 @@ class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
     ps.close()
   }
 
+  test("fan-in: one drained batch reaches the callback in event-time " +
+      "order across partitions, ties in input order") {
+    val ps = new PubSub(spark)
+    val batches = mutable.Buffer.empty[Seq[String]]
+    val cq = QueryBuilder[String](ps)
+      .from("order-a").from("order-b")
+      .connectTo(TypedOps.filter[String](_ => true))
+      .build()
+      .subscribe(evs => batches.synchronized {
+        batches += evs.map(_.content)
+      })
+    val a = ps.topic[String]("order-a")
+    val b = ps.topic[String]("order-b")
+    def at(sec: Int, v: String) = EventEnvelope.at(ts(sec), v)
+    // published before run(): every publish is its own input partition,
+    // a's two before b's two (union order), and the first batch holds all
+    a.publish(Seq(at(3, "a0"), at(1, "a1")))
+    b.publish(Seq(at(2, "b0"), at(1, "b1")))
+    a.publish(Seq(at(2, "a2"), at(4, "a3")))
+    b.publish(Seq(at(3, "b2"), at(0, "b3")))
+    cq.run()
+    cq.drain()
+    cq.close()
+    assert(batches.toList ==
+      List(Seq("b3", "a1", "b1", "a2", "b0", "a0", "b2", "a3")))
+    ps.close()
+  }
+
   test("ambiguous output: build() with multi-stream frontier fails") {
     val ps = new PubSub(spark)
     val b = QueryBuilder[Int](ps).from("x1").from("x2")

@@ -5,7 +5,9 @@ import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 import graft.core.{EventEnvelope, Stamp}
 
@@ -65,15 +67,28 @@ final case class EwmaState(
 final case class EwmaUpdate(key: String, tsMs: Long, seq: Long,
     value: Double, ewma: Double, alert: Boolean, n: Long)
 
-/** The genuinely custom stateful operators — the two reference semantics
-  * Spark has no built-in for (SURVEY §7.3): counting windows with
-  * arbitrary slide, and the streaming first-n Limit.
+/** The genuinely custom stateful operators — the reference semantics
+  * Spark has no built-in for (SURVEY §7.3):
+  *  - the window sequencers: counting windows with arbitrary slide
+  *    (`countingWindows`, `countingWindowsByKey`) and gapless temporal
+  *    windows over one input or a fan-in (`temporalBatchesGapless`,
+  *    `…ByKey`, `…Multi`, `…MultiByKey`);
+  *  - per-window top-k heavy hitters (`topKByWindow`);
+  *  - the per-key streaming EWMA with burst alerts (`ewmaByKey`);
+  *  - the streaming first-n Limit (`limit`).
   *
-  * Scale stance: these GLOBAL versions key everything to one group — a
+  * The six sequencer entry points are each one call into one of two
+  * private cores: the counting core (`countingCore`) and the gapless
+  * core (`gaplessCore`, whose punctuation mode — largest event time seen,
+  * or the fan-in watermark — is set by the entry point). A core groups on
+  * the constant 0 for the global variants and on the caller's key for
+  * the keyed ones, so plans and state schemas match per variant.
+  *
+  * Scale stance: the GLOBAL versions key everything to one group — a
   * deliberate single-writer bottleneck matching the reference's
   * single-process semantics (a global "first 100 events" is inherently
-  * sequential). The keyed variants (`countingWindowsByKey`) partition by a
-  * user key and scale horizontally; state per key is O(n + shift).
+  * sequential). The keyed variants partition by a user key and scale
+  * horizontally; counting state per key is O(n + shift).
   */
 object StatefulOps {
 
@@ -123,6 +138,50 @@ object StatefulOps {
     (CountingState(seen, head0 + drop, win, newBuf), out.toSeq)
   }
 
+  /** How a window sequencer groups its input and shapes each fired
+    * window: the group key of an event, and the output row of a window
+    * fired for a key. The global variants group on the constant 0 and
+    * emit the bare window; the keyed ones group on the caller's key and
+    * emit (key, window).
+    */
+  private final case class Grouping[T, K, O](
+      key: EventEnvelope[T] => K, emit: (K, WindowBatch[T]) => O)(
+      implicit val encKey: Encoder[K], val encOut: Encoder[O])
+
+  private def global[T: TypeTag]: Grouping[T, Int, WindowBatch[T]] =
+    Grouping[T, Int, WindowBatch[T]](_ => 0, (_, w) => w)(
+      Encoders.scalaInt, ExpressionEncoder())
+
+  private def byKey[T: TypeTag](key: EventEnvelope[T] => String)
+      : Grouping[T, String, (String, WindowBatch[T])] =
+    Grouping[T, String, (String, WindowBatch[T])](key, (k, w) => k -> w)(
+      Encoders.STRING, ExpressionEncoder())
+
+  /** The counting core behind `countingWindows` and
+    * `countingWindowsByKey`: one counting sequence per group of `g`.
+    */
+  private def countingCore[T: TypeTag, K, O](n: Int, shift: Int)(
+      g: Grouping[T, K, O], ds: Dataset[EventEnvelope[T]]): Dataset[O] = {
+    require(n > 0, s"n=$n must be positive")
+    require(shift > 0, s"shift=$shift must be positive")
+    implicit val encState: Encoder[CountingState[T]] =
+      ExpressionEncoder[CountingState[T]]()
+    import g.{encKey, encOut}
+    val emit = g.emit
+
+    ds.groupByKey(g.key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (k: K, it: Iterator[EventEnvelope[T]],
+         state: GroupState[CountingState[T]]) =>
+          val st = state.getOption.getOrElse(
+            CountingState[T](0L, 0L, 0L, Seq.empty))
+          val incoming = it.toSeq.sortBy(_.stamp.start_time.getTime)
+          val (newState, out) = processCounting(n, shift, st, incoming)
+          state.update(newState)
+          out.iterator.map(emit(k, _))
+      }
+  }
+
   /** Counting windows of size n sliding by shift over a single logical
     * stream (reference: CountingWindowPolicy, selection_policy.go:122-128,
     * 140-176). shift == n tumbles, shift < n re-delivers (overlap), shift
@@ -136,26 +195,8 @@ object StatefulOps {
     * event in the reference.
     */
   def countingWindows[T: TypeTag](n: Int, shift: Int)(
-      ds: Dataset[EventEnvelope[T]]): Dataset[WindowBatch[T]] = {
-    require(n > 0 && shift > 0)
-    implicit val encState: Encoder[CountingState[T]] =
-      ExpressionEncoder[CountingState[T]]()
-    implicit val encOut: Encoder[WindowBatch[T]] =
-      ExpressionEncoder[WindowBatch[T]]()
-    implicit val encKey: Encoder[Int] = Encoders.scalaInt
-
-    ds.groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, it: Iterator[EventEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[CountingState[T]]) =>
-          val st = state.getOption.getOrElse(
-            CountingState[T](0L, 0L, 0L, Seq.empty))
-          val incoming = it.toSeq.sortBy(_.stamp.start_time.getTime)
-          val (newState, out) = processCounting(n, shift, st, incoming)
-          state.update(newState)
-          out.iterator
-      }
-  }
+      ds: Dataset[EventEnvelope[T]]): Dataset[WindowBatch[T]] =
+    countingCore(n, shift)(global[T], ds)
 
   /** Keyed counting windows — the horizontally scalable variant: one
     * independent counting window per key, state partitioned across
@@ -163,25 +204,102 @@ object StatefulOps {
     */
   def countingWindowsByKey[T: TypeTag](n: Int, shift: Int)(
       key: EventEnvelope[T] => String)(
-      ds: Dataset[EventEnvelope[T]]): Dataset[(String, WindowBatch[T])] = {
-    require(n > 0 && shift > 0)
-    implicit val encState: Encoder[CountingState[T]] =
-      ExpressionEncoder[CountingState[T]]()
-    implicit val encOut: Encoder[(String, WindowBatch[T])] =
-      ExpressionEncoder[(String, WindowBatch[T])]()
-    implicit val encKey: Encoder[String] = Encoders.STRING
+      ds: Dataset[EventEnvelope[T]]): Dataset[(String, WindowBatch[T])] =
+    countingCore(n, shift)(byKey(key), ds)
 
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: String, it: Iterator[EventEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[CountingState[T]]) =>
-          val st = state.getOption.getOrElse(
-            CountingState[T](0L, 0L, 0L, Seq.empty))
-          val incoming = it.toSeq.sortBy(_.stamp.start_time.getTime)
-          val (newState, out) = processCounting(n, shift, st, incoming)
-          state.update(newState)
-          out.iterator.map(k -> _)
-      }
+  /** When the gapless core closes a window. Each entry point picks one;
+    * no caller can.
+    */
+  private sealed trait Punctuation
+
+  /** Single input: close windows on the largest event time seen so far
+    * (less the allowed lateness); no timeout.
+    */
+  private case object MaxSeen extends Punctuation
+
+  /** Fan-in: each input branch gets its own watermark, delayed by the
+    * allowed lateness, BEFORE the union, so the query watermark is their
+    * minimum. Windows close against that watermark, which advances
+    * BETWEEN micro-batches, so every call re-arms an event-time timeout
+    * at the next unemitted window end: windows fire once the watermark
+    * passes them even if no input sends another event.
+    */
+  private case object FanIn extends Punctuation
+
+  /** The gapless core behind the four `temporalBatchesGapless*` entry
+    * points: one gapless window sequence per group of `g` over `inputs`,
+    * closed as `punctuation` says. Window b spans
+    * [origin + b*slide, + length).
+    */
+  private def gaplessCore[T: TypeTag, K, O](lengthMs: Long, slideMs: Long,
+      origin: Option[Long], alignToEpoch: Boolean, latenessMs: Long,
+      punctuation: Punctuation)(
+      g: Grouping[T, K, O], inputs: Seq[Dataset[EventEnvelope[T]]])
+      : Dataset[O] = {
+    require(inputs.nonEmpty, "inputs: fan-in needs at least one input stream")
+    require(slideMs >= 0,
+      s"slideMs=$slideMs must be non-negative (0 = tumbling)")
+    require(latenessMs >= 0,
+      s"latenessMs=$latenessMs (allowedLateness) must be non-negative")
+    require(lengthMs >= 1000, s"lengthMs=$lengthMs: sub-second windows " +
+      "unsupported: windowId is epoch-seconds")
+    val slide = if (slideMs == 0) lengthMs else slideMs
+    require(slide >= 1000, s"slideMs=$slideMs: sub-second windows " +
+      "unsupported: windowId is epoch-seconds")
+    implicit val encState: Encoder[GaplessState[T]] =
+      ExpressionEncoder[GaplessState[T]]()
+    import g.{encKey, encOut}
+    val key = g.key
+    val emit = g.emit
+    val fanIn = punctuation == FanIn
+
+    def sequence[I](in: Dataset[I], envelope: I => EventEnvelope[T],
+        timeout: GroupStateTimeout): Dataset[O] =
+      in.groupByKey(i => key(envelope(i)))
+        .flatMapGroupsWithState(OutputMode.Append, timeout) {
+          (k: K, it: Iterator[I], state: GroupState[GaplessState[T]]) =>
+            val wm =
+              if (fanIn) Some(state.getCurrentWatermarkMs()) else None
+            // fan-in lateness already rides the watermark delay, so the
+            // close bound is not lowered a second time
+            val out = processGapless(lengthMs, slide, origin, alignToEpoch,
+              it.map(envelope), state, closeBoundOverride = wm,
+              latenessMs = if (fanIn) 0L else latenessMs)
+            // re-arm: fire again when the watermark passes the next
+            // unemitted window's end (must be strictly ahead of the
+            // current watermark or Spark rejects the timestamp)
+            for (w <- wm; st <- state.getOption) {
+              val nextEnd = st.originMs + st.nextBucket * slide + lengthMs
+              state.setTimeoutTimestamp(math.max(nextEnd, w + 1))
+            }
+            out.map(emit(k, _))
+        }
+
+    punctuation match {
+      case MaxSeen =>
+        sequence[EventEnvelope[T]](inputs.head, e => e,
+          GroupStateTimeout.NoTimeout)
+      case FanIn =>
+        // the event-time timeout check requires the watermarked COLUMN
+        // to reach the stateful operator, so the envelope rides in a
+        // carrier with the projected event_time (stamp.start_time)
+        implicit val encWm: Encoder[WatermarkedEnvelope[T]] =
+          ExpressionEncoder[WatermarkedEnvelope[T]]()
+        // allowedLateness rides the branch watermark delay itself: the
+        // query watermark lags each source's max event time by the
+        // grace, so rows less than the grace behind survive Spark's
+        // pre-stateful late filter (it drops event_time <= watermark)
+        // AND windows close exactly latenessMs later
+        val union = inputs.map { ds =>
+          ds.toDF()
+            .withColumn("event_time", col("stamp.start_time"))
+            .withWatermark("event_time", s"$latenessMs milliseconds")
+        }.reduce(_.unionByName(_))
+          .as[WatermarkedEnvelope[T]]
+        sequence[WatermarkedEnvelope[T]](union,
+          w => EventEnvelope(w.stamp, w.content),
+          GroupStateTimeout.EventTimeTimeout)
+    }
   }
 
   /** Gapless temporal windows — the full reference TemporalWindowPolicy
@@ -215,26 +333,9 @@ object StatefulOps {
       origin: Option[Long] = None,
       alignToEpoch: Boolean = false,
       latenessMs: Long = 0L)(
-      ds: Dataset[EventEnvelope[T]]): Dataset[WindowBatch[T]] = {
-    require(slideMs >= 0, "slide must be non-negative (0 = tumbling)")
-    require(latenessMs >= 0, "allowedLateness must be non-negative")
-    val slide = if (slideMs == 0) lengthMs else slideMs
-    require(lengthMs >= 1000 && slide >= 1000,
-      "sub-second windows unsupported: windowId is epoch-seconds")
-    implicit val encState: Encoder[GaplessState[T]] =
-      ExpressionEncoder[GaplessState[T]]()
-    implicit val encOut: Encoder[WindowBatch[T]] =
-      ExpressionEncoder[WindowBatch[T]]()
-    implicit val encKey: Encoder[Int] = Encoders.scalaInt
-
-    ds.groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, it: Iterator[EventEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[GaplessState[T]]) =>
-          processGapless(lengthMs, slide, origin, alignToEpoch, it, state,
-            latenessMs = latenessMs)
-      }
-  }
+      ds: Dataset[EventEnvelope[T]]): Dataset[WindowBatch[T]] =
+    gaplessCore(lengthMs, slideMs, origin, alignToEpoch, latenessMs,
+      MaxSeen)(global[T], Seq(ds))
 
   /** Keyed gapless temporal windows — the horizontally scalable variant
     * (one independent window sequence per key, state partitioned across
@@ -245,27 +346,9 @@ object StatefulOps {
       origin: Option[Long] = None,
       alignToEpoch: Boolean = false,
       latenessMs: Long = 0L)(key: EventEnvelope[T] => String)(
-      ds: Dataset[EventEnvelope[T]]): Dataset[(String, WindowBatch[T])] = {
-    require(slideMs >= 0, "slide must be non-negative (0 = tumbling)")
-    require(latenessMs >= 0, "allowedLateness must be non-negative")
-    val slide = if (slideMs == 0) lengthMs else slideMs
-    require(lengthMs >= 1000 && slide >= 1000,
-      "sub-second windows unsupported: windowId is epoch-seconds")
-    implicit val encState: Encoder[GaplessState[T]] =
-      ExpressionEncoder[GaplessState[T]]()
-    implicit val encOut: Encoder[(String, WindowBatch[T])] =
-      ExpressionEncoder[(String, WindowBatch[T])]()
-    implicit val encKey: Encoder[String] = Encoders.STRING
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: String, it: Iterator[EventEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[GaplessState[T]]) =>
-          processGapless(lengthMs, slide, origin, alignToEpoch, it, state,
-            latenessMs = latenessMs)
-            .map(k -> _)
-      }
-  }
+      ds: Dataset[EventEnvelope[T]]): Dataset[(String, WindowBatch[T])] =
+    gaplessCore(lengthMs, slideMs, origin, alignToEpoch, latenessMs,
+      MaxSeen)(byKey(key), Seq(ds))
 
   /** Multi-input gapless temporal windows — the reference's
     * MultiTemporalWindowPolicy readiness rule (every buffer must hold an
@@ -274,18 +357,11 @@ object StatefulOps {
     *
     * A plain union of the inputs would close windows on EITHER side's
     * max event time; the reference waits for ALL sides. Spark's
-    * min-over-sources watermark expresses exactly that: each branch gets
-    * its own 0-delay watermark BEFORE the union, the query watermark is
-    * their minimum, and the sequencer closes windows up to the watermark
-    * instead of the observed max event time. A fast input's events
-    * simply buffer in state until the slow input catches up — the same
-    * buffering the reference's per-input buffers do.
-    *
-    * Because the close bound is the watermark (which advances BETWEEN
-    * micro-batches), emission rides event-time timeouts: after each
-    * invocation the group re-arms a timeout at the next unemitted window
-    * end, so windows fire as soon as the watermark passes them even if
-    * no further events arrive on any input.
+    * min-over-sources watermark expresses exactly that (the gapless
+    * core's fan-in punctuation): the sequencer closes windows up to the
+    * watermark instead of the observed max event time. A fast input's events simply buffer in
+    * state until the slow input catches up — the same buffering the
+    * reference's per-input buffers do.
     *
     * Boundary convention: a window closes when watermark >= end — the
     * same equality convention as the single-input sequencer's
@@ -297,57 +373,9 @@ object StatefulOps {
       origin: Option[Long] = None,
       alignToEpoch: Boolean = false,
       latenessMs: Long = 0L)(
-      inputs: Seq[Dataset[EventEnvelope[T]]]): Dataset[WindowBatch[T]] = {
-    require(inputs.nonEmpty, "fan-in needs at least one input stream")
-    require(latenessMs >= 0, "allowedLateness must be non-negative")
-    val slide = if (slideMs == 0) lengthMs else slideMs
-    require(lengthMs >= 1000 && slide >= 1000,
-      "sub-second windows unsupported: windowId is epoch-seconds")
-    implicit val encState: Encoder[GaplessState[T]] =
-      ExpressionEncoder[GaplessState[T]]()
-    implicit val encOut: Encoder[WindowBatch[T]] =
-      ExpressionEncoder[WindowBatch[T]]()
-    implicit val encKey: Encoder[Int] = Encoders.scalaInt
-    // the event-time timeout check requires the watermarked COLUMN to
-    // reach the stateful operator, so the envelope rides in a carrier
-    // with the projected event_time (stamp.start_time) alongside
-    implicit val encWm: Encoder[WatermarkedEnvelope[T]] =
-      ExpressionEncoder[WatermarkedEnvelope[T]]()
-
-    import org.apache.spark.sql.functions.col
-    // one 0-delay watermark PER BRANCH, before the union: the query
-    // watermark becomes min over branches = the reference readiness
-    // allowedLateness rides the branch watermark delay itself: the query
-    // watermark lags each source's max event time by the grace, so rows
-    // within it survive Spark's pre-stateful late filter AND windows
-    // close exactly latenessMs later — no second subtraction in
-    // processGapless (the override bound already carries the lag).
-    val union = inputs.map { ds =>
-      ds.toDF()
-        .withColumn("event_time", col("stamp.start_time"))
-        .withWatermark("event_time", s"$latenessMs milliseconds")
-    }.reduce(_.unionByName(_))
-      .as[WatermarkedEnvelope[T]]
-
-    union.groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Int, it: Iterator[WatermarkedEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[GaplessState[T]]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val out = processGapless(lengthMs, slide, origin, alignToEpoch,
-            it.map(w => EventEnvelope(w.stamp, w.content)), state,
-            closeBoundOverride = Some(wm))
-          // re-arm: fire again when the watermark passes the next
-          // unemitted window's end (must be strictly ahead of the
-          // current watermark or Spark rejects the timestamp)
-          state.getOption.foreach { st =>
-            val nextEnd = st.originMs + st.nextBucket * slide + lengthMs
-            state.setTimeoutTimestamp(math.max(nextEnd, wm + 1))
-          }
-          out
-      }
-  }
+      inputs: Seq[Dataset[EventEnvelope[T]]]): Dataset[WindowBatch[T]] =
+    gaplessCore(lengthMs, slideMs, origin, alignToEpoch, latenessMs,
+      FanIn)(global[T], inputs)
 
   /** Keyed multi-input gapless windows — the horizontally scalable
     * variant of [[temporalBatchesGaplessMulti]]: one independent
@@ -362,62 +390,23 @@ object StatefulOps {
       alignToEpoch: Boolean = false,
       latenessMs: Long = 0L)(key: EventEnvelope[T] => String)(
       inputs: Seq[Dataset[EventEnvelope[T]]])
-      : Dataset[(String, WindowBatch[T])] = {
-    require(inputs.nonEmpty, "fan-in needs at least one input stream")
-    require(latenessMs >= 0, "allowedLateness must be non-negative")
-    val slide = if (slideMs == 0) lengthMs else slideMs
-    require(lengthMs >= 1000 && slide >= 1000,
-      "sub-second windows unsupported: windowId is epoch-seconds")
-    implicit val encState: Encoder[GaplessState[T]] =
-      ExpressionEncoder[GaplessState[T]]()
-    implicit val encOut: Encoder[(String, WindowBatch[T])] =
-      ExpressionEncoder[(String, WindowBatch[T])]()
-    implicit val encKey: Encoder[String] = Encoders.STRING
-    implicit val encWm: Encoder[WatermarkedEnvelope[T]] =
-      ExpressionEncoder[WatermarkedEnvelope[T]]()
-
-    import org.apache.spark.sql.functions.col
-    // allowedLateness rides the branch watermark delay itself: the query
-    // watermark lags each source's max event time by the grace, so rows
-    // within it survive Spark's pre-stateful late filter AND windows
-    // close exactly latenessMs later — no second subtraction in
-    // processGapless (the override bound already carries the lag).
-    val union = inputs.map { ds =>
-      ds.toDF()
-        .withColumn("event_time", col("stamp.start_time"))
-        .withWatermark("event_time", s"$latenessMs milliseconds")
-    }.reduce(_.unionByName(_))
-      .as[WatermarkedEnvelope[T]]
-
-    union.groupByKey(w => key(EventEnvelope(w.stamp, w.content)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (k: String, it: Iterator[WatermarkedEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[GaplessState[T]]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val out = processGapless(lengthMs, slide, origin, alignToEpoch,
-            it.map(w => EventEnvelope(w.stamp, w.content)), state,
-            closeBoundOverride = Some(wm))
-          state.getOption.foreach { st =>
-            val nextEnd = st.originMs + st.nextBucket * slide + lengthMs
-            state.setTimeoutTimestamp(math.max(nextEnd, wm + 1))
-          }
-          out.map(k -> _)
-      }
-  }
+      : Dataset[(String, WindowBatch[T])] =
+    gaplessCore(lengthMs, slideMs, origin, alignToEpoch, latenessMs,
+      FanIn)(byKey(key), inputs)
 
   /** Shared sequencer step: buffer incoming, emit every window closed by
     * the close bound (including empty ones), trim, update state. Window b
-    * spans [origin + b*slide, + length). The default close bound is the
-    * max event time seen — single-input punctuation; the multi-input
-    * variant overrides it with the query watermark (min over sources).
+    * spans [origin + b*slide, + length). Without an override the close
+    * bound is the max event time seen less `latenessMs` — single-input
+    * punctuation; the fan-in punctuation overrides it with the query
+    * watermark (min over sources).
     */
   private def processGapless[T](lengthMs: Long, slideMs: Long,
       origin: Option[Long], alignToEpoch: Boolean,
       it: Iterator[EventEnvelope[T]],
-      state: org.apache.spark.sql.streaming.GroupState[GaplessState[T]],
-      closeBoundOverride: Option[Long] = None,
-      latenessMs: Long = 0L)
+      state: GroupState[GaplessState[T]],
+      closeBoundOverride: Option[Long],
+      latenessMs: Long)
       : Iterator[WindowBatch[T]] = {
     val incoming = it.toSeq.sortBy(_.stamp.start_time.getTime)
     if (incoming.isEmpty && state.getOption.isEmpty) Iterator.empty
@@ -555,7 +544,7 @@ object StatefulOps {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (win: Long, it: Iterator[(Long, String, Long)],
-         _: org.apache.spark.sql.streaming.GroupState[Long]) =>
+         _: GroupState[Long]) =>
           it.toSeq.sortBy { case (_, v, n) => (-n, v) }
             .take(k).iterator.zipWithIndex
             .map { case ((_, v, n), i) => TopKRow(win, i + 1, v, n) }
@@ -598,7 +587,6 @@ object StatefulOps {
     implicit val encWm: Encoder[WatermarkedEnvelope[(Long, Double)]] =
       ExpressionEncoder[WatermarkedEnvelope[(Long, Double)]]()
 
-    import org.apache.spark.sql.functions.col
     ds.toDF()
       .withColumn("event_time", col("stamp.start_time"))
       .withWatermark("event_time", delay)
@@ -607,7 +595,7 @@ object StatefulOps {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (k: String, it: Iterator[WatermarkedEnvelope[(Long, Double)]],
-         state: org.apache.spark.sql.streaming.GroupState[EwmaState]) =>
+         state: GroupState[EwmaState]) =>
           val wm = state.getCurrentWatermarkMs()
           val st = state.getOption.getOrElse(EwmaState(Seq.empty, 0.0, 0L, 0L))
           val pending = st.pending ++ it.map(w =>
@@ -649,7 +637,7 @@ object StatefulOps {
     ds.groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Int, it: Iterator[EventEnvelope[T]],
-         state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+         state: GroupState[Long]) =>
           val already = state.getOption.getOrElse(0L)
           val take = math.max(0L, n - already).toInt
           val sorted = it.toSeq.sortBy(_.stamp.start_time.getTime)

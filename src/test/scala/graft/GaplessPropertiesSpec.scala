@@ -245,11 +245,18 @@ class GaplessPropertiesSpec extends AnyFunSuite with LocalSparkSuite {
     ps.close()
   }
 
+  // the fan-in sequencer closes on the watermark through an event-time
+  // timeout, so its run also shows the timeout re-arm surviving a restart
+  for ((path, sequencer) <- Seq[(String,
+      Dataset[EventEnvelope[Int]] => Dataset[WindowBatch[Int]])](
+    "" -> (ds => StatefulOps.temporalBatchesGapless[Int](LenMs)(ds)),
+    " (fan-in)" ->
+      (ds => StatefulOps.temporalBatchesGaplessMulti[Int](LenMs)(Seq(ds)))))
   test("sequencer state survives a checkpointed restart: anchor kept, " +
-      "pre-restart buckets stay closed") {
+      "pre-restart buckets stay closed" + path) {
     val ps = new PubSub(spark)
-    val topic = ps.topic[Int]("gapless-restart")
-    val out = StatefulOps.temporalBatchesGapless[Int](LenMs)(topic.stream)
+    val topic = ps.topic[Int]("gapless-restart" + path.filter(_.isLetter))
+    val out = sequencer(topic.stream)
     val ckpt = tempPath("ckpt-gapless")
     val batches = mutable.Buffer.empty[WindowBatch[Int]]
     def start() = out.writeStream.outputMode("append")
@@ -263,6 +270,7 @@ class GaplessPropertiesSpec extends AnyFunSuite with LocalSparkSuite {
     topic.publish(Seq(at(0, 1), at(35, 99))) // closes [0,10)..[20,30)
     q1.processAllAvailable()
     q1.stop()
+    assert(batches.size == 3) // (fan-in: fired by the armed timeout)
     val q2 = start()
     topic.publish(Seq(
       at(5, -1),   // late: its bucket closed BEFORE the restart

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -173,41 +174,75 @@ class TemporalSpec extends AnyFunSuite with LocalSparkSuite {
     ps.close()
   }
 
-  test("allowedLateness: late-but-within-grace lands, beyond-grace drops") {
-    val ps = new PubSub(spark)
-    val t = ps.topic[String]("tlateness")
-    // length 10s, lateness 10s: a window stays open until punctuation
-    // passes end + 10s, so an out-of-order event <=10s behind max still
-    // finds its window; one behind a CLOSED window drops like before.
-    val out = StatefulOps.temporalBatchesGapless[String](
-      10000L, latenessMs = 10000L)(t.stream)
-    val batches = mutable.Buffer.empty[WindowBatch[String]]
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (b: Dataset[WindowBatch[String]], _: Long) =>
-        batches.synchronized { batches ++= b.collect() }; ()
-      }.start()
-    t.publish(Seq(
-      EventEnvelope.at(ts(5), "e1"),
-      EventEnvelope.at(ts(16), "e2"))) // 0-lateness would close [5,15) here
-    q.processAllAvailable()
-    // 11s late vs max-seen, but within the grace: [5,15) is still open
-    t.publish(Seq(EventEnvelope.at(ts(6), "late")))
-    q.processAllAvailable()
-    assert(batches.isEmpty) // nothing closed yet: bound = 16s - 10s grace
-    t.publish(Seq(EventEnvelope.at(ts(40), "e3"))) // bound 30: closes b0,b1
-    q.processAllAvailable()
-    // [5,15) closed above -> an event for it now is BEYOND the grace
-    t.publish(Seq(
-      EventEnvelope.at(ts(7), "beyond"),
-      EventEnvelope.at(ts(70), "flush"))) // bound 60: closes through [45,55)
-    q.processAllAvailable()
-    q.stop()
-    val ordered = batches.sortBy(_.windowId)
-    assert(ordered.map(_.events) ==
-      Seq(Seq("e1", "late"), Seq("e2"), Seq(), Seq("e3"), Seq()))
-    assert(!batches.exists(_.events.contains("beyond")))
-    ps.close()
+  /** The four gapless sequencers over one input, each giving bare
+    * windows: the keyed ones run every event under one key, the fan-in
+    * ones take the input as their only branch.
+    */
+  private def gaplessPaths(latenessMs: Long)
+      : Seq[(String, Dataset[EventEnvelope[String]] =>
+        Dataset[WindowBatch[String]])] = {
+    implicit val enc: Encoder[WindowBatch[String]] =
+      ExpressionEncoder[WindowBatch[String]]()
+    val key = (_: EventEnvelope[String]) => "k"
+    Seq(
+      "global" -> (ds => StatefulOps.temporalBatchesGapless[String](
+        10000L, latenessMs = latenessMs)(ds)),
+      "keyed" -> (ds => StatefulOps.temporalBatchesGaplessByKey[String](
+        10000L, latenessMs = latenessMs)(key)(ds).map(_._2)),
+      "fan-in" -> (ds => StatefulOps.temporalBatchesGaplessMulti[String](
+        10000L, latenessMs = latenessMs)(Seq(ds))),
+      "keyed fan-in" -> (ds =>
+        StatefulOps.temporalBatchesGaplessMultiByKey[String](
+          10000L, latenessMs = latenessMs)(key)(Seq(ds)).map(_._2)))
   }
+
+  // the global path keeps the test's original name
+  for ((path, sequencer) <- gaplessPaths(latenessMs = 10000L))
+    test("allowedLateness: late-but-within-grace lands, beyond-grace drops" +
+        (if (path == "global") "" else s" ($path)")) {
+      val ps = new PubSub(spark)
+      val t = ps.topic[String](s"tlateness-$path")
+      // length 10s, lateness 10s: a window stays open until punctuation
+      // passes end + 10s, so an out-of-order event <=10s behind max still
+      // finds its window; one behind a CLOSED window drops like before.
+      val out = sequencer(t.stream)
+      val batches = mutable.Buffer.empty[WindowBatch[String]]
+      val q = out.writeStream.outputMode("append")
+        .foreachBatch { (b: Dataset[WindowBatch[String]], _: Long) =>
+          batches.synchronized { batches ++= b.collect() }; ()
+        }.start()
+      t.publish(Seq(
+        EventEnvelope.at(ts(5), "e1"),
+        EventEnvelope.at(ts(16), "e2"))) // 0-lateness would close [5,15)
+      q.processAllAvailable()
+      // 10s and 7s behind max-seen, within the grace: [5,15) is still
+      // open
+      t.publish(Seq(
+        EventEnvelope.at(ts(6), "late"),
+        EventEnvelope.at(ts(9), "within")))
+      q.processAllAvailable()
+      assert(batches.isEmpty) // nothing closed yet: bound = 16s - 10s grace
+      t.publish(Seq(EventEnvelope.at(ts(40), "e3"))) // bound 30: b0, b1
+      q.processAllAvailable()
+      // [5,15) closed above -> an event for it now is BEYOND the grace
+      t.publish(Seq(
+        EventEnvelope.at(ts(7), "beyond"),
+        EventEnvelope.at(ts(70), "flush"))) // bound 60: through [45,55)
+      q.processAllAvailable()
+      q.stop()
+      // the fan-in pair hold the grace in the branch watermark delay, and
+      // Spark's late-row filter drops an event AT the watermark (ts <=
+      // max - lateness): "late", exactly 10s behind, lands only on the
+      // single-input pair, which drop only events behind a closed window
+      val first =
+        if (path.contains("fan-in")) Seq("e1", "within")
+        else Seq("e1", "late", "within")
+      val ordered = batches.sortBy(_.windowId)
+      assert(ordered.map(_.events) ==
+        Seq(first, Seq("e2"), Seq(), Seq("e3"), Seq()))
+      assert(!batches.exists(_.events.contains("beyond")))
+      ps.close()
+    }
 
   test("subscribeBatch with temporal policy delivers whole windows") {
     val ps = new PubSub(spark)

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Full local gate: compile, specs, DuckDB-oracle correctness, bench.
 # Usage: tools/run_gate.sh [sfDir]   (default /root/testdata/sf0.01)
-set -e
+# pipefail: a failed spec or oracle mismatch fails the gate even though
+# its output is piped through grep/tail (the Verify line's `|| true` is
+# deliberate: per-query failures there are reported by the oracle step)
+set -e -o pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=$(mktemp -d /tmp/graft-gate-XXXX)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Sessions
+import graft.queries.Tables
 
 /** Build a larger-SF fixture from an existing one by union-multiplying
   * the three scale-sensitive tables (documents, embeddings, events) with
@@ -165,14 +166,14 @@ object ScaleFixture {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new java.io.File(out).mkdirs()
 
-    multiplied(spark.read.parquet(s"$src/documents.parquet"), mult) {
+    multiplied(Tables.read(spark, s"$src/documents.parquet"), mult) {
       (df, r) => df
         .withColumn("doc_id", col("doc_id") + lit(r * IdOffset))
         .withColumn("text", reword(r))
         .withColumn("n_chars", length(col("text")))
     }.write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val embSrc = spark.read.parquet(s"$src/embeddings.parquet")
+    val embSrc = Tables.read(spark, s"$src/embeddings.parquet")
     val embMult = multiplied(embSrc, mult) {
       (df, r) => df
         .withColumn("vec_id", col("vec_id") + lit(r * IdOffset))
@@ -188,7 +189,7 @@ object ScaleFixture {
     else embMult
     emb.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    multiplied(spark.read.parquet(s"$src/events.parquet"), mult) {
+    multiplied(Tables.read(spark, s"$src/events.parquet"), mult) {
       (df, r) => df
         .withColumn("event_id", col("event_id") + lit(r * IdOffset))
         .withColumn("user_id", col("user_id") + lit(r * IdOffset))

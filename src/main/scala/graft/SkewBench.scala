@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Sessions
 import graft.operators.{Ann, Joins}
+import graft.queries.Tables
 
 /** Skew-repair measurement at fixture scale (the SCALE.md skew rows):
   * builds (or reuses) a ScaleFixture with a PLANTED dense cluster on
@@ -40,7 +41,7 @@ object SkewBench {
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$fix/embeddings.parquet")))
       ScaleFixture.run(spark, src, fix, mult, hotN)
-    val emb = spark.read.parquet(s"$fix/embeddings.parquet")
+    val emb = Tables.read(spark, s"$fix/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val nVec = emb.count()
     val dim = emb.head().getSeq[Float](1).length

@@ -59,7 +59,7 @@ object StreamBench {
     (0 until 10).foreach(i => java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.1/events.parquet"),
       java.nio.file.Paths.get(f"$lakeDir/part-$i%03d.parquet")))
-    val lakeRows = spark.read.parquet(lakeDir).count()
+    val lakeRows = graft.queries.Tables.read(spark, lakeDir).count()
     // ts arrives in whatever unit the driver fixture carries (nanos
     // longs historically, native micros since r11) — dispatch on the
     // observed type exactly like Tables.load (r12: this main was the
@@ -168,7 +168,8 @@ object StreamBench {
       .getOrElse(math.max(n / 25, 2000))
     val ingestDocs = sys.env.getOrElse("SPARK_GRAFT_INGEST_DOCS",
       "/root/testdata/sf0.001")
-    val fixDocs = spark.read.parquet(s"$ingestDocs/documents.parquet")
+    val fixDocs = graft.queries.Tables.read(spark,
+      s"$ingestDocs/documents.parquet")
     val lmFit = graft.operators.Importance.fit(fixDocs,
       org.apache.spark.sql.functions.col("text"),
       org.apache.spark.sql.functions.col("source") === "src0")

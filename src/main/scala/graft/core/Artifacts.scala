@@ -66,7 +66,7 @@ object Artifacts {
     val v = version.orElse(versions(spark, root, name).lastOption)
       .getOrElse(throw new NoSuchElementException(
         s"no versions of artifact '$name' under $root"))
-    spark.read.parquet(s"$root/$name/v=$v")
+    graft.queries.Tables.read(spark, s"$root/$name/v=$v")
   }
 
   // --- typed codecs --------------------------------------------------

@@ -73,10 +73,19 @@ object Det {
   * q_corpus_build's exact-dedup keeper keeps every row whose doc_id is
   * the min of its digest group, so a duplicate or null doc_id would let
   * two copies survive. FixtureSchemaSpec pins it on the fixtures.
+  *
+  * Every parquet read of the library goes through [[read]], which takes
+  * the schema from one parquet footer read on the driver instead of
+  * letting Spark infer it. Spark's inference (`mergeSchemasInParallel`)
+  * runs one Spark job per read, even for a single file, and on the
+  * small fixtures that job is a visible share of a query's build time.
+  * No schema is cached across calls: every read pays its own footer
+  * read, so a rewritten table is never read with a stale schema.
   */
 object Tables {
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+    TimestampType}
 
   /** Load one fixture table, normalizing `events.ts` to session-local
     * TimestampType REGARDLESS of the fixture's parquet encoding. The
@@ -97,11 +106,72 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = read(spark, s"$dir/$name.parquet")
       df.withColumn("ts", normalizedTs(df, "ts"))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, s"$dir/$name.parquet")
     }
+
+  /** A parquet read whose schema comes from one parquet footer read on
+    * the driver, so the read runs no Spark job.
+    *
+    * The footer is the one Spark's own inference would read (without
+    * `mergeSchema`): the path itself when it is a file, else the first
+    * data file, by path, of a flat directory. Names that start with `_`
+    * or `.` are not data files (`_SUCCESS`, checksum files). The footer
+    * is read with Spark's own footer reader, row groups skipped, and goes
+    * through Spark's `readSchemaFromFooter` with a converter built
+    * from the session's SQL conf, so a Spark-written file keeps its
+    * embedded Spark schema and any other file gets the same
+    * `nanosAsLong`, `inferTimestampNTZ`, binary and INT96 rules as an
+    * inferred read.
+    *
+    * Layouts with no single footer to read fall back to plain
+    * `spark.read.parquet`, keeping Spark's own errors and partition
+    * inference: a missing path (a glob pattern included), a directory
+    * with no data file, a nested or partitioned directory, and a file
+    * whose footer cannot be read or converted.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+
+    def dataFile(st: FileStatus): Boolean =
+      !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith(".")
+
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val root = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    val file = root.flatMap { st =>
+      if (st.isFile) Some(st).filter(dataFile)
+      else {
+        val data = fs.listStatus(p).toSeq.filter(dataFile)
+        if (data.exists(_.isDirectory)) None
+        else data.sortBy(_.getPath.toString).headOption
+      }
+    }
+    file.flatMap { st =>
+      scala.util.Try(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).toOption
+    }
+  }
 
   /** The unit dispatch itself, usable on ANY frame carrying the events
     * `ts` column — StreamBench's lake-tail stream normalizes with the

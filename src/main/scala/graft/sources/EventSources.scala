@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
 
 import graft.core.EventEnvelope
+import graft.queries.Tables
 
 /** Sources and sinks.
   *
@@ -30,16 +31,17 @@ object EventSources {
 
   /** Batch-read one fixture table (nanos-aware). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.queries.Tables.load(spark, dir, name)
+    Tables.load(spark, dir, name)
 
   /** Streaming file source over a parquet directory. Schema is read from
-    * the existing files; `maxFilesPerTrigger` bounds per-batch intake
-    * (backpressure). This is how the engine tails a 100 TB lake table.
+    * the existing files (one footer on the driver, [[Tables.read]]);
+    * `maxFilesPerTrigger` bounds per-batch intake (backpressure). This is
+    * how the engine tails a 100 TB lake table.
     */
   def parquetStream(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 16): DataFrame =
     spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(Tables.read(spark, path).schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
 

@@ -1,7 +1,15 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SparkThrowable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.Tables
 
 /** Fixture-drift tripwire. Round 11 lost 32 queries, 10 bench headliners
   * and 9 tests to a SILENT driver-side change of `events.ts` from
@@ -71,7 +79,123 @@ class FixtureSchemaSpec extends AnyFunSuite with LocalSparkSuite {
           "the place that absorbs it; update the pin here once " +
           "load-side normalization is restored.")
       }
+      // Tables.load reads the schema from one footer itself: the whole
+      // StructType (nullability and metadata too) must be what Spark's
+      // inference gives, on the fixtures and on a Spark-written table
+      for (dir <- Seq("sf0.001", "sf0.01", "sf0.1")
+          .map(SfDir.replace("sf0.001", _)) :+ sparkWrittenDir)
+        assert(Tables.load(spark, dir, table).schema ==
+          inferredSchema(dir, table),
+          s"$dir/$table: the footer schema differs from the inferred one")
     }
+  }
+
+  private val TableNames = Expected.keys.toSeq.sorted
+
+  /** The schema the inferring reader gives a table, after the same `ts`
+    * normalization as [[Tables.load]]: what `load` returned before it
+    * read footers itself.
+    */
+  private def inferredSchema(dir: String, table: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = spark.read.parquet(s"$dir/$table.parquet")
+    if (table == "events") df.withColumn("ts", Tables.normalizedTs(df, "ts"))
+      .schema
+    else df.schema
+  }
+
+  /** Spark jobs that `body` starts on this thread. The listener bus is
+    * asynchronous but FIFO, so a marker job run after `body` arrives
+    * after every job `body` started; tagging both with a job group keeps
+    * events still queued from earlier tests out of the count.
+    */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jobs-probe") => jobs.incrementAndGet(); ()
+          case Some("jobs-marker") => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-probe", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-marker", "end of the counted jobs")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(marker.await(10, TimeUnit.SECONDS),
+        "marker job event never arrived")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every fixture table rewritten by Spark as a directory of two part
+    * files plus `_SUCCESS` (and their `.crc` files): the layout of the
+    * benchmark's fixture.
+    */
+  private lazy val sparkWrittenDir: String = {
+    val dir = tempPath("spark-written")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for (t <- TableNames) {
+      spark.read.parquet(s"$SfDir/$t.parquet").repartition(2)
+        .write.parquet(s"$dir/$t.parquet")
+      val names = new java.io.File(s"$dir/$t.parquet").list()
+      assert(names.count(_.startsWith("part-")) == 2 &&
+        names.contains("_SUCCESS"), s"$t layout: ${names.sorted.toSeq}")
+    }
+    dir
+  }
+
+  test("loading a fixture table runs no Spark job, nor does building " +
+      "q_revenue_nation (four loads and nothing else eager)") {
+    val sf001 = SfDir.replace("sf0.001", "sf0.01")
+    for (dir <- Seq(sf001, sparkWrittenDir); t <- TableNames) {
+      val n = jobsDuring(Tables.load(spark, dir, t).schema)
+      assert(n == 0, s"Tables.load($dir, $t) ran $n Spark job(s)")
+    }
+    val n = jobsDuring(
+      SparkEntry.allDefs("q_revenue_nation").build(spark, sf001))
+    assert(n == 0, s"building q_revenue_nation ran $n Spark job(s)")
+  }
+
+  test("paths with no footer to read keep Spark's own errors and " +
+      "partition inference") {
+    val missing = intercept[AnalysisException](
+      Tables.load(spark, tempPath("missing"), "lineitem"))
+    assert(missing.getCondition == "PATH_NOT_FOUND", missing.getMessage)
+
+    // a directory holding only a _SUCCESS marker, and a file that is no
+    // parquet, fail as the inferring reader fails on them
+    def failure(read: => DataFrame): (Class[_], String) = {
+      val e = intercept[Exception](read)
+      (e.getClass, e match {
+        case t: SparkThrowable => t.getCondition
+        case _ => e.getMessage
+      })
+    }
+    val noData = tempPath("no-data")
+    val table = new java.io.File(s"$noData/lineitem.parquet")
+    table.mkdirs()
+    new java.io.File(table, "_SUCCESS").createNewFile()
+    val junk = tempPath("junk")
+    java.nio.file.Files.write(java.nio.file.Paths.get(junk),
+      "not a parquet file".getBytes)
+    for (path <- Seq(table.getPath, junk)) {
+      val got = failure(Tables.read(spark, path))
+      assert(got == failure(spark.read.parquet(path)), s"$path: $got")
+    }
+    assert(failure(Tables.read(spark, table.getPath)) ==
+      (classOf[AnalysisException], "UNABLE_TO_INFER_SCHEMA"))
+
+    val partitioned = tempPath("partitioned")
+    spark.range(10).selectExpr("id", "id % 2 AS k").write.partitionBy("k")
+      .parquet(partitioned)
+    val stream = graft.sources.EventSources.parquetStream(spark, partitioned)
+    assert(stream.columns.toSeq == Seq("id", "k"), stream.columns.toSeq)
   }
 
   test("documents.text stays BMP-only and clear of the BPE oracle's " +

@@ -141,14 +141,13 @@ object ScaleFixture {
     val src = args(0)
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 3
-    val hotN = if (args.length > 3) args(3).toInt else 0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
     val spark: SparkSession = Sessions.tune(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    run(spark, src, out, mult, hotN)
-    println(s"""{"scale_fixture":{"src":"$src","out":"$out","mult":$mult,"hot_n":$hotN}}""")
+    run(spark, src, out, mult)
+    println(s"""{"scale_fixture":{"src":"$src","out":"$out","mult":$mult}}""")
     spark.stop()
   }
 
@@ -156,8 +155,8 @@ object ScaleFixture {
     * owns its session and stops it; FixtureSchemaSpec drives this with
     * the shared test session).
     */
-  def run(spark: SparkSession, src: String, out: String, mult: Int,
-      hotN: Int = 0): Unit = {
+  def run(spark: SparkSession, src: String, out: String,
+      mult: Int): Unit = {
     // events.ts round-trips in whatever unit the source carries:
     // nanosAsLong lets a NANOS-era fixture read (as nano longs, written
     // back as longs); a native-MICROS fixture passes through as
@@ -173,21 +172,11 @@ object ScaleFixture {
         .withColumn("n_chars", length(col("text")))
     }.write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val embSrc = Tables.read(spark, s"$src/embeddings.parquet")
-    val embMult = multiplied(embSrc, mult) {
+    multiplied(Tables.read(spark, s"$src/embeddings.parquet"), mult) {
       (df, r) => df
         .withColumn("vec_id", col("vec_id") + lit(r * IdOffset))
         .withColumn("embedding", signFlip(r))
-    }
-    // hotN > 0 plants a dense near-dup cluster on top of the multiplied
-    // table — skew-torture fixtures ONLY (a planted cluster changes
-    // every embedding query's answer, so correctness-artifact fixtures
-    // must keep hotN = 0)
-    val emb = if (hotN > 0)
-      embMult.unionByName(plantHotCluster(spark,
-        embSrc.head().getSeq[Float](1).length, hotN))
-    else embMult
-    emb.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    }.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     multiplied(Tables.read(spark, s"$src/events.parquet"), mult) {
       (df, r) => df

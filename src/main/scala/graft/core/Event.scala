@@ -70,4 +70,12 @@ object EventEnvelope {
         col(tsCol).as("start_time"),
         col(tsCol).as("end_time"),
         map().cast("map<string,string>").as("meta")))
+
+  /** The event-time step every streaming window operator starts from:
+    * an `event_time` column holding the stamp's start, watermarked with
+    * `delay`.
+    */
+  def withEventTime(df: DataFrame, delay: String): DataFrame =
+    df.withColumn("event_time", col("stamp.start_time"))
+      .withWatermark("event_time", delay)
 }

@@ -366,10 +366,12 @@ object Ann {
     */
   def nearDupPairsAuto(emb: DataFrame, dim: Int, threshold: Double,
       targetRecall: Double = 0.999, targetBucket: Long = 256L,
-      seed: Long = 42L, maxBucket: Long = DefaultMaxBucket): DataFrame =
-    nearDupPairsPlanned(emb, dim, threshold,
-      countedPlan("nearDupPairsAuto", emb, threshold, targetRecall,
-        targetBucket), seed, maxBucket)
+      seed: Long = 42L, maxBucket: Long = DefaultMaxBucket): DataFrame = {
+    val plan = countedPlan("nearDupPairsAuto", emb, threshold, targetRecall,
+      targetBucket)
+    nearDupPairs(emb, dim, threshold, plan.nBands, plan.bitsPerBand, seed,
+      maxBucket)
+  }
 
   /** [[lshPlan]] from `emb`'s own count, reported on stderr under
     * `caller`. An empty corpus plans like n=1 (the oracle SQL's
@@ -387,19 +389,6 @@ object Ann {
       f"expectedRecall=${plan.expectedRecall}%.4f")
     plan
   }
-
-  /** [[nearDupPairs]] under a caller-supplied [[LshPlan]] — the
-    * plan-explicit face of [[nearDupPairsAuto]]. Callers that already
-    * hold the corpus count (or must REPORT the scheme that actually
-    * ran, e.g. AutoNearDupBench's JSON) compute [[lshPlan]] once and
-    * pass it here, so the timed/printed scheme and the executed scheme
-    * cannot diverge.
-    */
-  def nearDupPairsPlanned(emb: DataFrame, dim: Int, threshold: Double,
-      plan: LshPlan, seed: Long = 42L,
-      maxBucket: Long = DefaultMaxBucket): DataFrame =
-    nearDupPairs(emb, dim, threshold, plan.nBands, plan.bitsPerBand,
-      seed, maxBucket)
 
   /** Verified STAR edges per LSH bucket — the scale-safe alternative to
     * [[nearDupPairs]]'s all-pairs contract under DENSE duplicate
@@ -677,10 +666,11 @@ object Ann {
     // inside every later hotOf probe, every deeper round, and then
     // TWICE more as the x/y sides of the pair-mining self-join; the
     // re-execution, not the split math, dominated the measured
-    // absorb cost (SkewBench 51.7 s -> 23.7 s at identical keeper
-    // output). Values are unchanged by materialization, so keeper
-    // output is bit-identical; same two-generation discipline as
-    // Components' label propagation.
+    // absorb cost (51.7 s -> 23.7 s at identical keeper output on the
+    // mult=10 planted-cluster fixture; SCALE.md "Skew torture").
+    // Values are unchanged by materialization, so keeper output is
+    // bit-identical; same two-generation discipline as Components'
+    // label propagation.
     var depth = 0
     val roundCkpts = scala.collection.mutable.Buffer.empty[DataFrame]
     while (hot.nonEmpty && depth < SemSplitMaxDepth) {

@@ -1,10 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize
 import graft.functions.{Aggregators, TextFunctions}
+import graft.queries.Det.sqlTokens
 
 /** Training-data pipeline mechanics: vocabulary stats, deterministic
   * sampling/splitting, sequence packing, and embedding quantization.
@@ -14,13 +16,37 @@ import graft.functions.{Aggregators, TextFunctions}
   */
 object PipelineQueries {
 
-  private val oracleTokens =
-    """list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)"""
-
   // Count-Min grid shape shared by q_heavy_hitters' Spark plan and its
   // DuckDB twin.
   private val CmsDepth = 4
   private val CmsWidth = 2048
+
+  /** One row (idAs, s) per distinct word-3-gram shingle of each document
+    * of `d`: the unit the q_contamination* queries match on.
+    */
+  private def shingles3(d: DataFrame, idAs: String): DataFrame =
+    d.select(col("doc_id").as(idAs),
+      explode(array_distinct(
+        TextFunctions.wordShingles(col("text"), 3))).as("s"))
+
+  /** The q_contamination* oracles' `docs` CTE: each document's source
+    * and distinct word-3-gram shingle list.
+    */
+  private val contaminationDocsSql =
+    SimilarityQueries.shingleSetsSql(3, "documents", "source")
+
+  /** DuckDB twin of q_contamination, and of q_contamination_bloom, whose
+    * prefilter must never change the answer.
+    */
+  private val contaminationOracle =
+    s"""WITH docs AS ($contaminationDocsSql),
+        ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS s FROM docs
+          WHERE source = 'src19'),
+        tr AS (SELECT doc_id AS train_doc, unnest(sh) AS s FROM docs
+          WHERE source <> 'src19')
+        SELECT train_doc, eval_doc, count(*) AS n_shared
+        FROM tr JOIN ev USING (s)
+        GROUP BY 1, 2 HAVING count(*) >= 2"""
 
   def defs: Map[String, QueryDef] = Map(
     // Heavy hitters: top-k vocabulary with deterministic tiebreak.
@@ -31,7 +57,7 @@ object PipelineQueries {
         .orderBy(col("n").desc, col("token"))
         .limit(20),
       Some(s"""SELECT token, count(*) AS n FROM (
-          SELECT unnest($oracleTokens) AS token FROM documents) t
+          SELECT unnest($sqlTokens) AS token FROM documents) t
         GROUP BY token ORDER BY n DESC, token LIMIT 20""")),
 
     // Heavy hitters via the Count-Min sketch, in ONE corpus pass (r19;
@@ -78,7 +104,7 @@ object PipelineQueries {
       Some {
         val p = graft.expressions.MinHashSignature.P
         s"""WITH toks AS (
-            SELECT unnest($oracleTokens) AS token FROM documents),
+            SELECT unnest($sqlTokens) AS token FROM documents),
           hp AS (SELECT token,
               ${Det.sqlMd5Int48("token", 1)} % $p AS a,
               ${Det.sqlMd5Int48("token", 13)} % ${p - 1} + 1 AS b
@@ -129,7 +155,7 @@ object PipelineQueries {
       Some(s"""SELECT CASE WHEN substr(md5(text), 1, 1) IN ('0','1','2')
           THEN 'eval' ELSE 'train' END AS split,
         count(*) AS n_docs,
-        CAST(sum(CAST(len($oracleTokens) AS BIGINT)) AS BIGINT) AS n_tokens
+        CAST(sum(CAST(len($sqlTokens) AS BIGINT)) AS BIGINT) AS n_tokens
         FROM documents GROUP BY 1""")),
 
     // Sequence packing: bin documents (in doc_id order) into ~4096-token
@@ -151,8 +177,8 @@ object PipelineQueries {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       },
       Some(s"""WITH c AS (
-          SELECT doc_id, CAST(len($oracleTokens) AS BIGINT) AS n_tok,
-            sum(CAST(len($oracleTokens) AS BIGINT)) OVER (
+          SELECT doc_id, CAST(len($sqlTokens) AS BIGINT) AS n_tok,
+            sum(CAST(len($sqlTokens) AS BIGINT)) OVER (
               ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
           FROM documents)
         SELECT CAST(floor(CAST(cum - 1 AS DOUBLE) / 4096) AS BIGINT) AS bin,
@@ -169,31 +195,14 @@ object PipelineQueries {
     "q_contamination" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        def sh(d: org.apache.spark.sql.DataFrame, idAs: String) =
-          d.select(col("doc_id").as(idAs),
-            explode(array_distinct(
-              TextFunctions.wordShingles(col("text"), 3))).as("s"))
-        val ev = sh(docs.where(col("source") === "src19"), "eval_doc")
-        val tr = sh(docs.where(col("source") =!= "src19"), "train_doc")
+        val ev = shingles3(docs.where(col("source") === "src19"), "eval_doc")
+        val tr = shingles3(docs.where(col("source") =!= "src19"), "train_doc")
         tr.join(broadcast(ev), "s")
           .groupBy("train_doc", "eval_doc")
           .agg(count(lit(1)).as("n_shared"))
           .where(col("n_shared") >= 2)
       },
-      Some("""WITH docs AS (
-          SELECT doc_id, source, list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 0)),
-            i -> list_aggregate(toks[i:i+2], 'string_agg', ' '))) AS sh
-          FROM (SELECT doc_id, source,
-            list_filter(regexp_split_to_array(text, '\s+'),
-              t -> len(t) > 0) AS toks FROM documents)),
-        ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS s FROM docs
-          WHERE source = 'src19'),
-        tr AS (SELECT doc_id AS train_doc, unnest(sh) AS s FROM docs
-          WHERE source <> 'src19')
-        SELECT train_doc, eval_doc, count(*) AS n_shared
-        FROM tr JOIN ev USING (s)
-        GROUP BY 1, 2 HAVING count(*) >= 2"""),
+      Some(contaminationOracle),
       bench = true),
 
     // Containment decontamination score — the normalized dial on top of
@@ -205,16 +214,12 @@ object PipelineQueries {
     "q_contamination_score" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        def sh(d: org.apache.spark.sql.DataFrame, idAs: String) =
-          d.select(col("doc_id").as(idAs),
-            explode(array_distinct(
-              TextFunctions.wordShingles(col("text"), 3))).as("s"))
         val evalDocs = docs.where(col("source") === "src19")
-        val ev = sh(evalDocs, "eval_doc")
+        val ev = shingles3(evalDocs, "eval_doc")
         val evSizes = evalDocs.select(col("doc_id").as("eval_doc"),
           size(array_distinct(TextFunctions.wordShingles(col("text"), 3)))
             .cast("long").as("n_eval"))
-        val tr = sh(docs.where(col("source") =!= "src19"), "train_doc")
+        val tr = shingles3(docs.where(col("source") =!= "src19"), "train_doc")
         tr.join(broadcast(ev), "s")
           .groupBy("train_doc", "eval_doc")
           .agg(count(lit(1)).as("n_shared"))
@@ -224,13 +229,7 @@ object PipelineQueries {
               .as("containment"))
           .where(col("containment") >= 0.1)
       },
-      Some(s"""WITH docs AS (
-          SELECT doc_id, source, list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 0)),
-            i -> list_aggregate(toks[i:i+2], 'string_agg', ' '))) AS sh
-          FROM (SELECT doc_id, source,
-            list_filter(regexp_split_to_array(text, '\\s+'),
-              t -> len(t) > 0) AS toks FROM documents)),
+      Some(s"""WITH docs AS ($contaminationDocsSql),
         ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS s FROM docs
           WHERE source = 'src19'),
         evn AS (SELECT doc_id AS eval_doc, CAST(len(sh) AS BIGINT) AS n_eval
@@ -253,21 +252,18 @@ object PipelineQueries {
     // membership before ANY wide exchange, and the exact verification
     // join is a plain shuffle equi-join sized by the bloom survivors
     // (FPR = |eval buckets|/2^20), not by the corpus. The oracle is
-    // byte-identical to q_contamination's: prefilter + exact verify must
-    // never change the answer.
+    // q_contamination's own: prefilter + exact verify must never change
+    // the answer.
     "q_contamination_bloom" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        def sh(d: org.apache.spark.sql.DataFrame, idAs: String) =
-          d.select(col("doc_id").as(idAs),
-            explode(array_distinct(
-              TextFunctions.wordShingles(col("text"), 3))).as("s"))
         // eager pin: the eval shingles feed the bucket build AND the
         // exact verification join, which plans on their measured
         // exploded size (the q_dup_spans cold-stats hazard)
         val ev = Materialize.pin(
-          sh(docs.where(col("source") === "src19"), "eval_doc"), eager = true)
-        val tr = sh(docs.where(col("source") =!= "src19"), "train_doc")
+          shingles3(docs.where(col("source") === "src19"), "eval_doc"),
+          eager = true)
+        val tr = shingles3(docs.where(col("source") =!= "src19"), "train_doc")
         val buckets = ev
           .select(pmod(xxhash64(col("s")), lit(1048576L)).as("b")).distinct()
         val result = tr
@@ -279,20 +275,7 @@ object PipelineQueries {
           .where(col("n_shared") >= 2)
         Materialize.releaseAfterFirstUse(result, ev)
       },
-      Some("""WITH docs AS (
-          SELECT doc_id, source, list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 0)),
-            i -> list_aggregate(toks[i:i+2], 'string_agg', ' '))) AS sh
-          FROM (SELECT doc_id, source,
-            list_filter(regexp_split_to_array(text, '\s+'),
-              t -> len(t) > 0) AS toks FROM documents)),
-        ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS s FROM docs
-          WHERE source = 'src19'),
-        tr AS (SELECT doc_id AS train_doc, unnest(sh) AS s FROM docs
-          WHERE source <> 'src19')
-        SELECT train_doc, eval_doc, count(*) AS n_shared
-        FROM tr JOIN ev USING (s)
-        GROUP BY 1, 2 HAVING count(*) >= 2""")),
+      Some(contaminationOracle)),
 
     // Population-stability drift monitor between two corpus snapshots
     // (the doc_id % 3 split stands in for yesterday-vs-today, as in
@@ -335,18 +318,14 @@ object PipelineQueries {
           -- BIGINT cast because DuckDB's double->BIGINT cast ROUNDS
           -- (half-even) where Spark's floor truncates
           least(CAST(floor(floor((
-            least(CAST(len(list_filter(regexp_split_to_array(text, '\\s+'),
-              x -> len(x) > 0)) AS DOUBLE) / 50.0, 1.0)
-            + least((CASE WHEN len(list_filter(regexp_split_to_array(text, '\\s+'),
-                x -> len(x) > 0)) > 0
+            least(CAST(len($sqlTokens) AS DOUBLE) / 50.0, 1.0)
+            + least((CASE WHEN len($sqlTokens) > 0
               THEN CAST(len(list_filter(list_transform(
-                  list_filter(regexp_split_to_array(text, '\\s+'),
-                    x -> len(x) > 0), t -> lower(t)),
+                  $sqlTokens, t -> lower(t)),
                   t -> list_contains(['the','a','an','and','or','of','to',
                     'in','is','it','that','for','on','with','as','was','at',
                     'by','be','this'], t))) AS DOUBLE)
-                / len(list_filter(regexp_split_to_array(text, '\\s+'),
-                    x -> len(x) > 0))
+                / len($sqlTokens)
               ELSE 0.0 END) * 4.0, 1.0)
             + greatest(1.0 - (CASE WHEN len(text) > 0
               THEN CAST(len(text) - len(regexp_replace(text,
@@ -510,9 +489,8 @@ object PipelineQueries {
               col("n_docs")).as("dup_pct"),
             col("top_lang"))
       },
-      Some("""WITH base AS (SELECT source, count(*) AS n_docs,
-          CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'),
-            t -> len(t) > 0))) AS BIGINT) AS n_tokens,
+      Some(s"""WITH base AS (SELECT source, count(*) AS n_docs,
+          CAST(sum(len($sqlTokens)) AS BIGINT) AS n_tokens,
           count(DISTINCT md5(text)) AS n_unique
           FROM documents GROUP BY source),
         lt AS (SELECT source, lang AS top_lang FROM (
@@ -626,7 +604,7 @@ object PipelineQueries {
             Det.r4(col("sw") / 10000.0).as("logw"))
       },
       Some(s"""WITH toks AS (SELECT doc_id, source,
-            unnest($oracleTokens) AS token FROM documents),
+            unnest($sqlTokens) AS token FROM documents),
         tb AS (SELECT doc_id, source,
             (instr('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 16 +
             (instr('0123456789abcdef', substr(md5(token), 2, 1)) - 1) AS b

@@ -45,6 +45,12 @@ object Det {
     */
   def r4q(c: Column): Column = floor(c * 10000 + 0.5)
 
+  /** DuckDB twin of TextFunctions.tokens over the `text` column:
+    * whitespace split, empty tokens dropped.
+    */
+  val sqlTokens: String =
+    """list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)"""
+
   def sqlR2(expr: String): String = s"floor(($expr) * 100 + 0.5) / 100"
   def sqlR4(expr: String): String = s"floor(($expr) * 10000 + 0.5) / 10000"
 

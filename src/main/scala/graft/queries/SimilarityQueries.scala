@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Materialize
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.operators.NearDup
+import graft.queries.Det.sqlTokens
 
 /** Deduplication and similarity-search queries — the training-data-pipeline
   * operators this engine adds beyond the reference's catalog.
@@ -116,13 +117,6 @@ object SimilarityQueries {
     Materialize.releaseAfterFirstUse(result, sets)
   }
 
-  /** Profiling accessor (CorpusBuildProfile): the thresholded pair graph
-    * exactly as q_corpus_build consumes it.
-    */
-  private[graft] def jaccardPairsForProfile(s: SparkSession,
-      dir: String): DataFrame =
-    jaccardPairs(s, dir).where(col("jq") >= JaccardThresholdQ)
-
   /** Verified STAR edges per shared-shingle bucket — the text-path twin
     * of [[graft.operators.Ann.nearDupStarEdges]] (VERDICT r17 item 6),
     * with the same exactness/refinement contract. Each shingle-hash
@@ -170,15 +164,15 @@ object SimilarityQueries {
   }
 
   /** DuckDB twin of [[shingleSets]] over `from`: the SELECT of
-    * (doc_id, carry..., sh), sh the distinct word-5-gram shingle list.
+    * (doc_id, carry..., sh), sh the distinct word-`n`-gram shingle list.
     */
-  private def shingleSetsSql(from: String, carry: String*): String = {
+  private[queries] def shingleSetsSql(n: Int, from: String,
+      carry: String*): String = {
     val cols = ("doc_id" +: carry).mkString(", ")
     s"""SELECT $cols, list_distinct(list_transform(
-        generate_series(1, greatest(len(toks) - ${Ngram - 1}, 0)),
-        i -> list_aggregate(toks[i:i+${Ngram - 1}], 'string_agg', ' '))) AS sh
-      FROM (SELECT $cols, list_filter(regexp_split_to_array(text, '\\s+'),
-        t -> len(t) > 0) AS toks FROM $from)"""
+        generate_series(1, greatest(len(toks) - ${n - 1}, 0)),
+        i -> list_aggregate(toks[i:i+${n - 1}], 'string_agg', ' '))) AS sh
+      FROM (SELECT $cols, $sqlTokens AS toks FROM $from)"""
   }
 
   /** The oracle's j column: r4 of the exact Jaccard from integer counts. */
@@ -209,7 +203,7 @@ object SimilarityQueries {
     * verify at the same integer cut. Yields (a, b) pairs.
     */
   private def jaccardStarOracle(minJQ: Long): String =
-    s"""WITH sdocs AS (${shingleSetsSql("documents")}),
+    s"""WITH sdocs AS (${shingleSetsSql(Ngram, "documents")}),
     sstar AS (
       SELECT min(doc_id) OVER (PARTITION BY s) AS a, doc_id AS b
       FROM (SELECT doc_id, unnest(sh) AS s FROM sdocs)),
@@ -220,7 +214,7 @@ object SimilarityQueries {
     * (minJ * 10000).
     */
   private def jaccardOracle(minJQ: Long): String =
-    s"""WITH docs AS (${shingleSetsSql("documents")}),
+    s"""WITH docs AS (${shingleSetsSql(Ngram, "documents")}),
     sh0 AS (SELECT doc_id, unnest(sh) AS s FROM docs),
     sh AS (
       SELECT doc_id, s FROM (
@@ -306,9 +300,9 @@ object SimilarityQueries {
   /** [[minhashLshPairs]] with the banding sized by
     * [[graft.operators.Ann.lshPlanJaccard]] from the corpus's own doc
     * count — the text-path twin of Ann.nearDupPairsAuto. Returns the
-    * plan alongside the frame so callers (TextLshTuneBench, specs)
-    * report the scheme that actually ran. Ledger-certified end to end
-    * as q_minhash_lsh_auto (DuckDB re-derives the plan from its own
+    * plan alongside the frame so callers (AutoLshSpec) report the
+    * scheme that actually ran. Ledger-certified end to end as
+    * q_minhash_lsh_auto (DuckDB re-derives the plan from its own
     * count and re-runs the sketch at those dimensions); the fixed
     * 64-perm/16-band q_minhash_lsh stays alongside it (it measured
     * SUB-linear at mult=100 — Jaccard banding degrades gracefully
@@ -346,7 +340,7 @@ object SimilarityQueries {
       .mkString(", ")
     val fold = (1 until r)
       .foldLeft("v0")((acc, i) => s"(($acc) * $m + v$i) % $p")
-    s"""WITH docs AS (${shingleSetsSql("documents")}),
+    s"""WITH docs AS (${shingleSetsSql(Ngram, "documents")}),
     shu AS (SELECT doc_id, unnest(sh) AS s FROM docs),
     hs AS (
       SELECT doc_id,
@@ -391,7 +385,7 @@ object SimilarityQueries {
   private def minhashLshAutoOracle(seed: Long): String = {
     val p = graft.expressions.MinHashSignature.P
     val m = HashFunctions.BandHashMult
-    s"""WITH docs AS MATERIALIZED (${shingleSetsSql("documents")}),
+    s"""WITH docs AS MATERIALIZED (${shingleSetsSql(Ngram, "documents")}),
     nn AS (SELECT count(*) AS n FROM documents),
     -- bandsFor(k) at t = $JaccardThreshold, recall target 0.999
     sized AS (
@@ -471,11 +465,9 @@ object SimilarityQueries {
     *    tokenization — the measured cause of the OOM above.
     */
   private def simhashOracle: String = {
-    val toks =
-      """list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)"""
     s"""WITH tb AS MATERIALIZED (
         SELECT doc_id, md5(tok) AS mh FROM
-          (SELECT doc_id, unnest($toks) AS tok FROM documents)),
+          (SELECT doc_id, unnest($sqlTokens) AS tok FROM documents)),
       ntok AS (SELECT doc_id, count(*) AS n FROM tb GROUP BY 1),
       digc AS (
         SELECT doc_id, p.p AS pos,
@@ -863,8 +855,7 @@ object SimilarityQueries {
           CAST(len(text) - len(regexp_replace(text,
             '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS BIGINT) AS npunct
           FROM (SELECT doc_id, text,
-            list_filter(regexp_split_to_array(text, '\\s+'),
-              x -> len(x) > 0) AS tk FROM exact) tq),
+            $sqlTokens AS tk FROM exact) tq),
         qual AS (SELECT doc_id, CAST(floor((
           least(CAST(nt AS DOUBLE) / 50.0, 1.0) +
           least((CASE WHEN nt > 0 THEN CAST(nstop AS DOUBLE) / nt ELSE 0.0 END) * 4.0, 1.0) +
@@ -876,8 +867,7 @@ object SimilarityQueries {
           WHERE e.doc_id NOT IN (SELECT doc_id FROM dropids)
             AND q.quality_q >= $QualityGateQ),
         ct AS (SELECT doc_id,
-            list_filter(regexp_split_to_array(text, '\\s+'),
-              x -> len(x) > 0) AS toks
+            $sqlTokens AS toks
           FROM clean),
         cc AS (SELECT doc_id, toks,
             unnest(generate_series(0,
@@ -917,7 +907,7 @@ object SimilarityQueries {
           WHERE doc_id <> mn),
         allx AS (SELECT doc_id, TRUE AS oe, text FROM ex
           UNION ALL SELECT doc_id, FALSE AS oe, text FROM dl),
-        docs2 AS (${shingleSetsSql("allx", "oe")}),
+        docs2 AS (${shingleSetsSql(Ngram, "allx", "oe")}),
         sh0 AS (SELECT doc_id, oe, unnest(sh) AS s FROM docs2),
         shf AS (SELECT doc_id, oe, s FROM (
             SELECT doc_id, oe, s, count(*) OVER (PARTITION BY s) AS df
@@ -1348,10 +1338,10 @@ object SimilarityQueries {
     // banding recall formula capped at 64, step-down when the cap binds)
     // recomputed independently by DuckDB from the same corpus counts.
     // The pair-mining outputs of the auto scheme are pinned by
-    // AutoLshSpec (planted duplicates) and measured by AutoNearDupBench;
-    // this query puts the SIZING DECISION in the hash-compared ledger so
-    // a drift in the plan math (the thing every auto-sized dedup run
-    // depends on) fails the gate, not just a spec.
+    // AutoLshSpec (planted duplicates) and measured in SCALE.md
+    // ("Auto-sized LSH"); this query puts the SIZING DECISION in the
+    // hash-compared ledger so a drift in the plan math (the thing every
+    // auto-sized dedup run depends on) fails the gate, not just a spec.
     //
     // FP-boundary note: every ceil/compare/quantize in the plan sits
     // >= 4e-7 from its decision boundary over this grid x the fixture

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Materialize
 import graft.functions.TextFunctions
 import graft.operators.Ops
+import graft.queries.Det.sqlTokens
 
 /** Text-analysis queries over the `documents` table: tokenization
   * (reference Tokenize, pkg/processing/default_operators.go:264-268 /
@@ -17,10 +18,6 @@ import graft.operators.Ops
   * linearly with input bytes and are bound by parquet decode, not compute.
   */
 object TextQueries {
-
-  /** DuckDB-side tokenizer identical to TextFunctions.tokens. */
-  private val oracleTokens =
-    """list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)"""
 
   /** QualityModel's fixed anchor weights (q_quality_classifier). */
   private val ClassifierW = Seq(-1.0, 1.2, 0.8, -2.0, 0.5)
@@ -48,7 +45,7 @@ object TextQueries {
         CAST(len(text) AS BIGINT) AS nchars,
         CAST(len(text) - len(regexp_replace(text,
           '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS BIGINT) AS npunct
-      FROM (SELECT doc_id, source, text, $oracleTokens AS toks
+      FROM (SELECT doc_id, source, text, $sqlTokens AS toks
         FROM documents
         WHERE text IS NOT NULL AND source IS NOT NULL) t) m"""
   }
@@ -66,7 +63,7 @@ object TextQueries {
     val structs = markers.map { case (lang, ws) =>
       val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
       s"""struct_pack(score := CAST(len(list_filter(
-         list_transform($oracleTokens, t -> lower(t)),
+         list_transform($sqlTokens, t -> lower(t)),
          t -> list_contains($arr, t))) AS INTEGER), lang := '$lang')"""
     }.mkString(",\n")
     s"""SELECT doc_id,
@@ -80,7 +77,7 @@ object TextQueries {
     "q_tokenize" -> QueryDef(
       (s, dir) => Ops.tokenize(col("text"), "token")(
         Tables.load(s, dir, "documents")).select("doc_id", "token"),
-      Some(s"SELECT doc_id, unnest($oracleTokens) AS token FROM documents")),
+      Some(s"SELECT doc_id, unnest($sqlTokens) AS token FROM documents")),
 
     // Global word count — tokenize + group (the reference's word-count
     // example collapsed over all windows).
@@ -89,7 +86,7 @@ object TextQueries {
         Tables.load(s, dir, "documents"))
         .groupBy("token").agg(count(lit(1)).as("n")),
       Some(s"""SELECT token, count(*) AS n FROM (
-        SELECT unnest($oracleTokens) AS token FROM documents) t
+        SELECT unnest($sqlTokens) AS token FROM documents) t
         GROUP BY token"""),
       bench = true),
 
@@ -102,8 +99,8 @@ object TextQueries {
           TextFunctions.approxBpeTokenCount(col("text")).as("n_bpe"),
           TextFunctions.punctCount(col("text")).cast("long").as("n_punct")),
       Some(s"""SELECT doc_id,
-        CAST(len($oracleTokens) AS BIGINT) AS n_tokens,
-        CAST(coalesce(list_sum(list_transform($oracleTokens,
+        CAST(len($sqlTokens) AS BIGINT) AS n_tokens,
+        CAST(coalesce(list_sum(list_transform($sqlTokens,
           t -> greatest(CAST(ceil(len(t) / 4.0) AS BIGINT), 1))), 0)
           + (len(text) - len(regexp_replace(text,
               '[.,;:!?''"()\\[\\]{}-]', '', 'g'))) AS BIGINT) AS n_bpe,
@@ -145,7 +142,7 @@ object TextQueries {
         val stop = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is",
           "it", "that", "for", "on", "with", "as", "was", "at", "by", "be",
           "this").map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (SELECT doc_id, text, $oracleTokens AS toks FROM documents),
+        s"""WITH t AS (SELECT doc_id, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id,
           CAST(len(toks) AS BIGINT) AS nt,
           CAST(len(list_filter(toks, x -> list_contains($stop, lower(x)))) AS BIGINT) AS nstop,
@@ -232,7 +229,7 @@ object TextQueries {
       },
       Some(s"""WITH d AS (SELECT
             CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y,
-            $oracleTokens AS toks
+            $sqlTokens AS toks
           FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
         ex AS (SELECT y, unnest(list_prepend(CAST(-1 AS BIGINT),
             list_transform(
@@ -294,7 +291,7 @@ object TextQueries {
           FROM documents) f
         JOIN ($langidOracleSql) l ON f.doc_id = l.doc_id
         JOIN (SELECT doc_id,
-          CAST(greatest(len($oracleTokens) - 2, 0) AS BIGINT) AS n_shingles
+          CAST(greatest(len($sqlTokens) - 2, 0) AS BIGINT) AS n_shingles
           FROM documents) s ON f.doc_id = s.doc_id""")),
 
     // Repetition metrics (Gopher-style quality filters: distinct-token
@@ -343,8 +340,8 @@ object TextQueries {
             when(distinctRatio >= 0.2 && topGramFrac <= 0.18, 1)
               .otherwise(0).cast("int").as("keep"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-          list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS toks
+      Some(s"""WITH t AS (SELECT doc_id,
+          $sqlTokens AS toks
           FROM documents),
         tc AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
             count(*) AS n_distinct, CAST(max(c) AS BIGINT) AS top_n
@@ -399,7 +396,7 @@ object TextQueries {
             element_at(col("chunk"), 1).as("head_token"))
       },
       Some(s"""WITH t AS (SELECT doc_id,
-          list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS toks
+          $sqlTokens AS toks
           FROM documents),
         c AS (SELECT doc_id, toks,
             unnest(generate_series(0, CAST(floor((len(toks) - 1) / 24.0) AS INTEGER))) AS i
@@ -497,7 +494,7 @@ object TextQueries {
           .orderBy(col("score").desc, col("doc_id")).limit(50)
         Materialize.releaseAfterFirstUse(result, docs)
       },
-      Some(s"""WITH t AS (SELECT doc_id, $oracleTokens AS toks FROM documents),
+      Some(s"""WITH t AS (SELECT doc_id, $sqlTokens AS toks FROM documents),
         d AS (SELECT doc_id, len(toks) AS dl, toks FROM t),
         stats AS (SELECT count(*) AS n_docs, avg(len(toks)) AS avgdl FROM t),
         tf AS (SELECT doc_id, dl, token, count(*) AS tf
@@ -549,7 +546,7 @@ object TextQueries {
       Some(s"""WITH t AS (SELECT doc_id, list_distinct(list_transform(
             generate_series(1, greatest(len(toks) - 7, 0)),
             i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS ws
-          FROM (SELECT doc_id, $oracleTokens AS toks FROM documents)),
+          FROM (SELECT doc_id, $sqlTokens AS toks FROM documents)),
         sh AS (SELECT doc_id, unnest(ws) AS w FROM t),
         freq AS (SELECT w, count(*) AS nd FROM sh GROUP BY 1)
         SELECT doc_id, count(*) AS n_windows,
@@ -586,7 +583,7 @@ object TextQueries {
         val result = dfT.join(capped, "token").where(col("df") >= 5)
         Materialize.releaseAfterFirstUse(result, sh)
       },
-      Some(s"""WITH sh AS (SELECT doc_id, unnest(list_distinct($oracleTokens)) AS token
+      Some(s"""WITH sh AS (SELECT doc_id, unnest(list_distinct($sqlTokens)) AS token
           FROM documents),
         d AS (SELECT token, count(*) AS df FROM sh GROUP BY 1),
         c AS (SELECT token, doc_id,
@@ -626,8 +623,8 @@ object TextQueries {
               .as("n_dup_chunks"))
         Materialize.releaseAfterFirstUse(result, ch)
       },
-      Some(s"""WITH t AS (SELECT doc_id, $oracleTokens AS toks FROM documents
-          WHERE len($oracleTokens) > 0),
+      Some(s"""WITH t AS (SELECT doc_id, $sqlTokens AS toks FROM documents
+          WHERE len($sqlTokens) > 0),
         f AS (SELECT doc_id, toks, list_transform(toks, w ->
             list_reduce(list_prepend(CAST(0 AS BIGINT),
               list_transform(generate_series(1, len(w)), i -> ascii(w[i]))),
@@ -710,7 +707,7 @@ object TextQueries {
           .select(col("doc_id"), col("n_tokens"),
             Det.r4(col("sn") / (col("n_tokens") * 10000.0)).as("avg_nll"))
       },
-      Some(s"""WITH toks AS (SELECT doc_id, unnest($oracleTokens) AS token
+      Some(s"""WITH toks AS (SELECT doc_id, unnest($sqlTokens) AS token
           FROM documents),
         tf AS (SELECT doc_id, token, count(*) AS c FROM toks GROUP BY 1, 2),
         vocab AS (SELECT token, CAST(sum(c) AS BIGINT) AS n FROM tf GROUP BY 1),
@@ -753,12 +750,13 @@ object TextQueries {
         // per distinct head token) — broadcastable by exactly the
         // q_unigram_nll vocab argument; the bg-keyed LM join below
         // stays a shuffle join (a web-scale BIGRAM vocabulary remains
-        // orders beyond broadcastable). Measured (NllSkewBench, 20M
-        // synthetic bigram rows, min of 3): window 12.1 s at a
-        // 90%-one-head corpus vs 3.2 s for this form; 5.3 vs 3.4 s at
-        // 30%; 2.5 vs 3.2 s on balanced heads — the window wins only
-        // when no head is hot, and a Zipfian corpus always has hot
-        // heads. Same exact long sums, same arithmetic, same rows.
+        // orders beyond broadcastable). Measured (20M synthetic bigram
+        // rows, min of 3; SCALE.md "Retired measurement mains"):
+        // window 12.1 s at a 90%-one-head corpus vs 3.2 s for this
+        // form; 5.3 vs 3.4 s at 30%; 2.5 vs 3.2 s on balanced heads —
+        // the window wins only when no head is hot, and a Zipfian
+        // corpus always has hot heads. Same exact long sums, same
+        // arithmetic, same rows.
         // lazy checkpoint: materializes inside the head-total broadcast
         // build, not as a separate construction-time job
         val cb = Materialize.checkpoint(tf2.groupBy("bg")
@@ -775,7 +773,7 @@ object TextQueries {
           .select(col("doc_id"), col("n_bigrams"),
             Det.r4(col("sn") / (col("n_bigrams") * 10000.0)).as("avg_nll"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, $oracleTokens AS toks FROM documents),
+      Some(s"""WITH t AS (SELECT doc_id, $sqlTokens AS toks FROM documents),
         bi AS (SELECT doc_id, unnest(list_transform(
             generate_series(1, greatest(len(toks) - 1, 0)),
             i -> list_aggregate(toks[i:i+1], 'string_agg', ' '))) AS bg
@@ -818,7 +816,7 @@ object TextQueries {
         val stop = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is",
           "it", "that", "for", "on", "with", "as", "was", "at", "by", "be",
           "this").map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (SELECT doc_id, source, text, $oracleTokens AS toks FROM documents),
+        s"""WITH t AS (SELECT doc_id, source, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id, source,
           CAST(len(toks) AS BIGINT) AS nt,
           CAST(len(list_filter(toks, x -> list_contains($stop, lower(x)))) AS BIGINT) AS nstop,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
+import graft.queries.Det.sqlTokens
 
 /** BPE tokenizer queries over the `documents` table — trainer, encoder,
   * and their oracled anchors (see graft.operators.Bpe for the scale
@@ -23,8 +24,7 @@ import graft.operators.Bpe
 object TokenizerQueries {
 
   private val oracleWords =
-    """SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\s+'),
-         t -> len(t) > 0)) AS word FROM documents"""
+    s"SELECT doc_id, unnest($sqlTokens) AS word FROM documents"
 
   private val oraclePairAgg =
     s"""wc AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),

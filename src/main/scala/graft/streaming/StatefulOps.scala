@@ -291,9 +291,7 @@ object StatefulOps {
         // pre-stateful late filter (it drops event_time <= watermark)
         // AND windows close exactly latenessMs later
         val union = inputs.map { ds =>
-          ds.toDF()
-            .withColumn("event_time", col("stamp.start_time"))
-            .withWatermark("event_time", s"$latenessMs milliseconds")
+          EventEnvelope.withEventTime(ds.toDF(), s"$latenessMs milliseconds")
         }.reduce(_.unionByName(_))
           .as[WatermarkedEnvelope[T]]
         sequence[WatermarkedEnvelope[T]](union,
@@ -531,9 +529,7 @@ object StatefulOps {
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong)
 
     import org.apache.spark.sql.functions._
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", "0 seconds")
+    EventEnvelope.withEventTime(ds.toDF(), "0 seconds")
       .groupBy(window(col("event_time"), s"$lengthMs milliseconds"),
         col("content"))
       .count()
@@ -587,9 +583,7 @@ object StatefulOps {
     implicit val encWm: Encoder[WatermarkedEnvelope[(Long, Double)]] =
       ExpressionEncoder[WatermarkedEnvelope[(Long, Double)]]()
 
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", delay)
+    EventEnvelope.withEventTime(ds.toDF(), delay)
       .as[WatermarkedEnvelope[(Long, Double)]]
       .groupByKey(w => key(EventEnvelope(w.stamp, w.content)))
       .flatMapGroupsWithState(OutputMode.Append,

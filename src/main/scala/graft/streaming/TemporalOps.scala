@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.core.EventEnvelope
+import graft.operators.Windows
 
 /** Temporal-window operators on the streaming surface (reference:
   * TemporalWindowPolicy, pkg/events/selection_policy.go:130-137,
@@ -37,22 +38,13 @@ object TemporalOps {
     */
   def windowAgg[T](length: String, slide: Option[String] = None,
       allowedLateness: String = "0 seconds")(
-      aggs: Column*)(ds: Dataset[EventEnvelope[T]]): DataFrame = {
-    val w = slide.fold(window(col("event_time"), length))(s =>
-      window(col("event_time"), length, s))
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      // allowedLateness > 0 is a free improvement over the reference,
-      // which silently skips any late event (selection_policy.go:587-589)
-      .withWatermark("event_time", allowedLateness)
-      .groupBy(w)
-      .agg(
-        min(col("stamp.start_time")).as("stamp_start"),
-        (max(col("stamp.end_time")).as("stamp_end") +: aggs): _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
-  }
+      aggs: Column*)(ds: Dataset[EventEnvelope[T]]): DataFrame =
+    // allowedLateness > 0 is a free improvement over the reference,
+    // which silently skips any late event (selection_policy.go:587-589)
+    Windows.temporal(col("event_time"), length, slide)(Nil,
+      Seq(min(col("stamp.start_time")).as("stamp_start"),
+        max(col("stamp.end_time")).as("stamp_end")) ++ aggs)(
+      EventEnvelope.withEventTime(ds.toDF(), allowedLateness))
 
   /** Per-window quality-drift monitor — the streaming face of
     * q_quality_drift: each tumbling window's documents are binned on
@@ -74,9 +66,7 @@ object TemporalOps {
     val bin = graft.operators.Drift.qualityBin(col("content"))
     val perBin = (0 until B).map(b =>
       sum(when(bin === b.toLong, 1L).otherwise(0L)).as(s"n$b"))
-    val agged = ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", allowedLateness)
+    val agged = EventEnvelope.withEventTime(ds.toDF(), allowedLateness)
       .groupBy(window(col("event_time"), length))
       .agg(count(lit(1)).as("n_docs"), perBin: _*)
     val binRows = explode(array((0 until B).map { b =>
@@ -111,15 +101,8 @@ object TemporalOps {
     */
   def wordCountWindow(length: String)(
       ds: Dataset[EventEnvelope[String]]): DataFrame =
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", "0 seconds")
-      .withColumn("word",
-        explode(graft.functions.TextFunctions.tokens(col("content"))))
-      .groupBy(window(col("event_time"), length), col("word"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("window_start", col("window.start"))
-      .drop("window")
+    Windows.wordCount(col("event_time"), col("content"), length)(
+      EventEnvelope.withEventTime(ds.toDF(), "0 seconds"))
 
   /** Session windows: per-key event chains with gaps below `gap` merge
     * into one session (no reference analogue — a free Spark capability;
@@ -128,9 +111,7 @@ object TemporalOps {
     */
   def sessionAgg[T](gap: String, keyCol: String)(aggs: Column*)(
       ds: Dataset[EventEnvelope[T]]): DataFrame =
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", "0 seconds")
+    EventEnvelope.withEventTime(ds.toDF(), "0 seconds")
       .groupBy(session_window(col("event_time"), gap),
         col(keyCol))
       .agg(count(lit(1)).as("n_events"), aggs: _*)
@@ -159,9 +140,7 @@ object TemporalOps {
       ExpressionEncoder[WindowBatch[T]]()
     val w = slide.fold(window(col("event_time"), length))(s =>
       window(col("event_time"), length, s))
-    ds.toDF()
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", "0 seconds")
+    EventEnvelope.withEventTime(ds.toDF(), "0 seconds")
       .groupBy(w)
       .agg(
         min(col("stamp.start_time")).as("stamp_start"),

@@ -109,10 +109,7 @@ object TypedOps {
     */
   def dedupWithinWatermark[T: TypeTag](delay: String): Op[T, T] = { ds =>
     implicit val e: Encoder[EventEnvelope[T]] = enc[T]
-    ds.toDF()
-      .withColumn("event_time", org.apache.spark.sql.functions
-        .col("stamp.start_time"))
-      .withWatermark("event_time", delay)
+    EventEnvelope.withEventTime(ds.toDF(), delay)
       .dropDuplicatesWithinWatermark("content")
       .drop("event_time")
       .as[EventEnvelope[T]]
@@ -222,9 +219,8 @@ object TypedOps {
 
   /** The stateless first half of [[nearDupWithinWatermark]] — watermark
     * stamp, md5 doc key, one-pass MinHash signature, band explode —
-    * factored out so StreamBench's ingest profile can time the
-    * signature/banding compute in isolation from the two stateful
-    * stages that follow it (band-claim state, claim-count window).
+    * factored out so NearDupStreamSpec can observe the band-claim
+    * stage apart from the claim-count window that follows it.
     */
   private[graft] def bandedProjection(delay: String, nGram: Int,
       nPerms: Int, nBands: Int, seed: Long)(
@@ -232,9 +228,7 @@ object TypedOps {
     import org.apache.spark.sql.functions._
     require(nBands > 0 && nPerms % nBands == 0,
       s"nPerms=$nPerms must be a positive multiple of nBands=$nBands")
-    df
-      .withColumn("event_time", col("stamp.start_time"))
-      .withWatermark("event_time", delay)
+    EventEnvelope.withEventTime(df, delay)
       .withColumn("doc_key", md5(col("content").cast("binary")))
       .withColumn("sig", graft.functions.HashFunctions.minhashSignature(
         {

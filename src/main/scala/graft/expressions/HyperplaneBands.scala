@@ -29,8 +29,8 @@ import org.apache.spark.sql.types._
   * k/4, bits high-to-low within the digit), so ANY engine with an md5
   * can reproduce the matrix exactly — the DuckDB oracle for
   * q_embed_neardup_auto builds the identical signs in SQL (at
-  * plan-sized band/bit dims), and so does its
-  * big-scale twin `tools/check_embed_scale.py` (keep all three in sync
+  * plan-sized band/bit dims), and so do the embed recipes of
+  * `tools/check_correctness.py --chunked` (keep all of them in sync
   * if the seed or digest recipe ever changes). Sign-projection
   * LSH only needs a symmetric component distribution for
   * P(collision) = 1 - θ/π; ±1 entries keep that property (this is

@@ -185,16 +185,16 @@ class LshPlanOracleSpec extends AnyFunSuite with LocalSparkSuite {
     }
   }
 
-  test("tools/check_minhash_subset.py's surgery needle occurs exactly " +
+  test("tools/check_correctness.py's surgery needle occurs exactly " +
       "once in q_minhash_lsh_auto's oracle") {
-    // the subset checker rewrites the ledger oracle at NEEDLE (restricting
+    // the minhash recipe rewrites the ledger oracle at NEEDLE (restricting
     // the docs CTE to a doc_id stride); a drifted oracle text would
     // otherwise surface only in a big-mult run
     val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("tools/check_minhash_subset.py")), "UTF-8")
+      java.nio.file.Paths.get("tools/check_correctness.py")), "UTF-8")
     val needle = "(?m)^NEEDLE = \"(.*)\"$".r.findFirstMatchIn(script)
       .map(_.group(1))
-      .getOrElse(fail("no NEEDLE assignment in check_minhash_subset.py"))
+      .getOrElse(fail("no NEEDLE assignment in check_correctness.py"))
     val oracle = SparkEntry.oracleSql("q_minhash_lsh_auto")
     assert(oracle.sliding(needle.length).count(_ == needle) == 1,
       s"'$needle' must occur exactly once in:\n$oracle")
